@@ -132,6 +132,15 @@ def test_bucket_overflow_guard_fires(spark, sf_dir, monkeypatch):
         REGISTRY["dedup_embedding_lsh_pairs"].fn(spark, sf_dir).collect()
 
 
+def test_duplicated_bucket_row_emits_no_self_pair(spark):
+    """A repeated (vec_id, bucket) row puts an id in its bucket's member
+    list twice; the candidates must still never pair a vector with itself."""
+    from thesis_iceberg_spark.queries.dedup import _bucket_candidates
+
+    buckets = spark.createDataFrame([(7, 1), (7, 1)], "vec_id BIGINT, bucket BIGINT")
+    assert _bucket_candidates(buckets, "test").collect() == []
+
+
 def _planted_fixture(tmp_path):
     """n=1200 embeddings: 600 random unit vectors + 150 planted near-dups
     at each pair cosine in {0.7, 0.8, 0.9, 0.95} (v' = c*v + sqrt(1-c^2)*u

@@ -105,38 +105,15 @@ _PRIORITY_CAP = 16  # window is 50; >=34 slots must remain for rotation —
 # the four ANN queries late in the round)
 
 DRIVER_WINDOW_PRIORITY: tuple[str, ...] = (
-    # Round 16 block (optimization round 2 of 2): queries whose CODE
-    # changed this round, plus the one r15 change the r15 window missed.
-    # r15 change #6 (semdedup members-frame staging, commit bc031ea)
-    # landed AFTER the r15 priority-block update, so its post-change
-    # output was covered only by gate_sim/pytest — VERDICT r15 #2 asks
-    # for the driver-oracle row this round closes: (also rides this
-    # round's LSH-kernel / bucket-candidate / CC changes below)
+    # connected_components' driver-local finish (union-find over one
+    # bounded Arrow collect) — its three consumers:
     "dedup_semdedup_centroid_far",
-    # r16 optimization changes: batched LSH signature kernel +
-    # groupBy-generated bucket candidates (replacing the count-window +
-    # merge self-join) + connected_components' fused per-round
-    # signature action — every registered consumer of those paths:
-    "dedup_embedding_lsh_pairs",
-    "dedup_embedding_kmeans_pairs",
     "dedup_embedding_cluster_canonical",
     "dedup_cluster_canonical",
-    # r16: per-vector centroid assignment as MAX(struct) aggregation
-    # (window deleted; both value-oracled) and the IVF index build's
-    # local Euclidean Lloyd fit (gate booleans unchanged, 34 -> 4 jobs):
-    "ann_batch_topk",
-    "ann_ivf_topk",
-    "ann_ivf_kmeans_topk",
-    # r16: single-pass shingle staging + lazy-checkpoint action fusion
-    # (the CC pattern) across the budget/composition paths — results
-    # identical by construction, re-verified:
-    "pipeline_pretrain_corpus",
-    "pipeline_token_budget_select",
-    "pipeline_decontaminate",
-    "dedup_ngram_jaccard_pairs",
-    "dedup_edit_verified_pairs",
-    "search_bm25_topk",
-    "pipeline_shard_shuffle",
+    # _bucket_candidates' defensive self-pair filter — both candidate
+    # paths that share it:
+    "dedup_embedding_lsh_pairs",
+    "dedup_embedding_kmeans_pairs",
 )
 
 assert len(DRIVER_WINDOW_PRIORITY) <= _PRIORITY_CAP, (

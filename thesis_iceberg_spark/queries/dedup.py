@@ -1129,12 +1129,12 @@ def _bucket_candidates(buckets: DataFrame, overflow_hint: str) -> DataFrame:
     Shape (r16 optimization round, guide §2.3 "aggregate before you
     shuffle"): ONE groupBy(bucket) collects each bucket's sorted member
     list — (vec_id, bucket) rows are unique by construction (a vector
-    emits each key at most once), so the list is a distinct-id set — and
-    the i<j pairs are generated NARROWLY from the array (posexplode +
-    slice), never a join.  The r15 form paid a count-window (sort by
-    bucket) plus a merge self-join (two more sorts) over the same
-    exchange; this is the same single bucket-keyed exchange with the
-    window and join machinery deleted — measured 0.96x on the candidate
+    emits each key at most once; self-pairs are still filtered in case a
+    caller breaks that) — and the i<j pairs are generated NARROWLY from
+    the array (posexplode + slice), never a join.  The r15 form paid a
+    count-window (sort by bucket) plus a merge self-join (two more
+    sorts) over the same exchange; this is the same single bucket-keyed
+    exchange with the window and join machinery deleted — measured 0.96x on the candidate
     step locally (the win is the deleted sorts/join at scale, plus it
     retires the broadcast-misplanning hazard the old merge hints worked
     around), identical pair sets (tests/exp_r16_bucketcand_ab.py).
@@ -1175,6 +1175,9 @@ def _bucket_candidates(buckets: DataFrame, overflow_hint: str) -> DataFrame:
                 )
             ).alias("vec_b"),
         )
+        # a duplicated (vec_id, bucket) row would repeat an id in the
+        # member list and pair it with itself; CC must never see that
+        .filter(F.col("vec_a") != F.col("vec_b"))
         .distinct()  # a pair may collide in several shared buckets
     )
 
@@ -1915,7 +1918,9 @@ FROM walk GROUP BY node
 """,
     doc="Near-dup CLUSTER resolution: the MinHash-LSH pair list is only "
     "half of dedup — keeping one doc per duplicate GROUP needs the "
-    "transitive closure. Connected components via ALTERNATING large-star/"
+    "transitive closure. Connected components: a pair list of up to "
+    "2^20 edges (CC_LOCAL_MAX_EDGES) is labeled by a driver union-find "
+    "over one bounded Arrow collect; past that, ALTERNATING large-star/"
     "small-star rounds (Kiveris et al., 'Connected Components in "
     "MapReduce and Beyond' — public paper), all as DataFrame groupBy/"
     "joins: each round is two keyed O(edges) shuffles, and the edge set "
@@ -1965,10 +1970,10 @@ FROM walk GROUP BY node
     "paper's float argmin can flip across engines on near-ties. The "
     "paper's rule is implemented as semdedup_keepers(keeper="
     "'centroid_far') below, pytest-pinned on crafted clusters. Same "
-    "large-star/small-star contraction (O(log n) rounds), same "
-    "recursive-CTE oracle shape; at 100 TB the pair list is the LSH "
-    "output (sub-quadratic, CI-gated) and each CC round is two keyed "
-    "O(edges) shuffles.",
+    "connected components (driver union-find up to 2^20 edges, "
+    "large-star/small-star rounds past it), same recursive-CTE oracle "
+    "shape; at 100 TB the pair list is the LSH output (sub-quadratic, "
+    "CI-gated) and each CC round is two keyed O(edges) shuffles.",
 )
 def dedup_embedding_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = dedup_embedding_lsh_pairs(spark, sf_dir).select("vec_a", "vec_b")
@@ -2010,9 +2015,13 @@ def _cluster_centroids(members: DataFrame, dim: int, mode: str | None = None) ->
         # F.get, not v[i]: under ANSI (Spark 4 default) ordinal indexing
         # THROWS INVALID_ARRAY_INDEX on a member shorter than dim; get()
         # yields NULL, which avg() ignores — the ragged contract both
-        # modes share (pytest-pinned)
+        # modes share (pytest-pinned).  One SQL string, not D Column
+        # builders: the same analyzed aggregate, ~4 fewer py4j calls per
+        # dimension of driver-side planning.
         return members.groupBy("label").agg(
-            F.array(*[F.avg(F.get(F.col("v"), i)) for i in range(dim)]).alias("c")
+            F.expr(
+                "array(" + ", ".join(f"avg(get(v, {i}))" for i in range(dim)) + ")"
+            ).alias("c")
         )
     if mode != "explode":
         raise ValueError(f"unknown centroid mode: {mode}")
@@ -2049,10 +2058,10 @@ def semdedup_keepers(
     SemDeDup keeps the least-typical member to preserve diversity.  Ties
     break on vec_id so the result stays deterministic.
 
-    Spark shape for centroid_far: cluster labels come from the same CC
-    contraction; centroids are one groupBy(label) with D per-dimension
-    avg() aggregates (map-side combinable — ONE shuffle, no posexplode
-    row blow-up); each member joins its centroid back on label (clusters
+    Spark shape for centroid_far: cluster labels come from the same
+    connected_components; centroids are one groupBy(label) with D
+    per-dimension avg() aggregates (map-side combinable — ONE shuffle, no
+    posexplode row blow-up); each member joins its centroid back on label (clusters
     ≪ corpus, broadcastable at any realistic duplicate rate) and the
     keeper is a struct-min aggregate, again one keyed shuffle.
 
@@ -2193,7 +2202,8 @@ FROM labels l JOIN keep k ON l.label = k.label
     "keeper's cosine margin over the runner-up is >= ~1.6e-9 (measured "
     "at sf0.001/sf0.01, asserted > 1e-10 in tests/test_semdedup_keeper."
     "py) while cross-engine double-summation disagreement is ~1e-14, so "
-    "the float argmin cannot flip between engines.  Shape: CC labels -> ONE "
+    "the float argmin cannot flip between engines.  Shape: CC labels (a "
+    "driver union-find while the pair list fits 2^20 edges) -> ONE "
     "map-side-combined groupBy(label) centroid shuffle (D avg() "
     "aggregates) -> broadcast centroid join -> struct-min keeper; every "
     "step keyed on cluster label, clusters are << corpus at any "
@@ -2203,10 +2213,48 @@ def dedup_semdedup_centroid_far(spark: SparkSession, sf_dir: str) -> DataFrame:
     return semdedup_keepers(spark, sf_dir, keeper="centroid_far")
 
 
+# connected_components finishes on the driver when the distinct edge list
+# has at most this many rows: 16 MiB of two int64 columns, collected once
+# as Arrow, replaces every eager round checkpoint and signature probe of
+# the star contraction (~27 Spark jobs per call).
+CC_LOCAL_MAX_EDGES = 1 << 20
+
+
+def _min_labels(a, b):
+    """(nodes, labels) numpy arrays for the edge list (a, b): every node
+    of an edge with its component's minimum node.  Vectorized union-find:
+    each sweep hooks the larger root of every edge under the smaller one,
+    then compresses paths fully, until both ends of every edge share a
+    root.  Roots only ever move to smaller ids, so a component's root is
+    its minimum."""
+    import numpy as np
+
+    nodes, idx = np.unique(np.concatenate([a, b]), return_inverse=True)
+    u, v = idx[: len(a)], idx[len(a):]
+    parent = np.arange(len(nodes))
+    while True:
+        ru, rv = parent[u], parent[v]
+        if np.array_equal(ru, rv):
+            return nodes, nodes[parent]
+        np.minimum.at(parent, np.maximum(ru, rv), np.minimum(ru, rv))
+        while True:
+            pp = parent[parent]
+            if np.array_equal(pp, parent):
+                break
+            parent = pp
+
+
 def connected_components(pairs: DataFrame, max_rounds: int = 25) -> DataFrame:
     """(node, label) component labels for an undirected edge list (a, b).
 
-    Alternating large-star / small-star contraction:
+    The distinct non-self edges are checkpointed eagerly, then at most
+    CC_LOCAL_MAX_EDGES + 1 of them are collected as one Arrow table.  If
+    the list fits, a driver union-find (_min_labels) labels it, the
+    checkpoint is freed, and the result is a local frame of the input's
+    id type: three Spark jobs (the checkpoint's shuffle and result
+    stages, then the collect), whatever the graph's shape.
+
+    Past the bound: alternating large-star / small-star contraction.
 
       * large-star: every node points its LARGER neighbors at its minimum
         neighborhood member — long paths fold toward local minima;
@@ -2219,16 +2267,34 @@ def connected_components(pairs: DataFrame, max_rounds: int = 25) -> DataFrame:
     proves O(log^2 n) worst-case; measured ~log on chains) versus
     DIAMETER rounds for plain min-label propagation.  Per round: two
     groupBy + two join shuffles, all keyed on node ids, checkpointed
-    eagerly to cut the iterative lineage.  Isolated nodes never appear in
-    ``pairs`` and so are absent from the output (near-dup semantics:
-    unpaired docs are their own canonical).
+    eagerly to cut the iterative lineage; ``max_rounds`` bounds only this
+    path.  Either way the label is the component minimum, and isolated
+    nodes never appear in ``pairs`` and so are absent from the output
+    (near-dup semantics: unpaired docs are their own canonical).
     """
+    import pyarrow as pa
+    from pyspark.sql.types import StructField, StructType
+
+    from thesis_iceberg_spark.queries.ckpt import free_local_checkpoint
+
     edges = (
         pairs.filter(F.col("a") != F.col("b"))
         .select("a", "b")
         .distinct()
         .localCheckpoint(eager=True)
     )
+    # the limit bounds the collect before anything reaches the driver
+    local = edges.limit(CC_LOCAL_MAX_EDGES + 1).toArrow()
+    if local.num_rows <= CC_LOCAL_MAX_EDGES:
+        free_local_checkpoint(edges)
+        nodes, labels = _min_labels(
+            local.column("a").to_numpy(), local.column("b").to_numpy()
+        )
+        id_type = edges.schema["a"].dataType
+        return pairs.sparkSession.createDataFrame(
+            pa.table({"node": nodes, "label": labels}),
+            StructType([StructField("node", id_type), StructField("label", id_type)]),
+        )
     # all_nodes is consumed exactly ONCE (the roots anti-join after
     # convergence) and derives from the already-checkpointed initial
     # edges, so checkpointing it bought nothing — the r15 eager
@@ -2272,8 +2338,8 @@ def connected_components(pairs: DataFrame, max_rounds: int = 25) -> DataFrame:
             # EAGER — the lazy-fusion dead end, measured twice now
             # (r16): making this lazy and letting the signature
             # aggregate below materialize it saves one Spark job per
-            # round (29 -> 25 jobs, 0.91x, labels identical —
-            # tests/exp_r16_cc_ab.py), but a full-bench run under the
+            # round (29 -> 25 jobs, 0.91x, labels identical; recorded in
+            # OPTIMIZATION_r16.md #8), but a full-bench run under the
             # fleet-wide lazy variant reproduced the ROUND-3 accumulator
             # failure ("Failed to update accumulator ... non-existent
             # accumulator"): a lazily checkpointed RDD's originating
