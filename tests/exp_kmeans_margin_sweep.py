@@ -22,9 +22,9 @@ import time
 from pyspark.sql import functions as F
 
 from thesis_iceberg_spark import get_spark
+from thesis_iceberg_spark.operators.vector import dot
 from thesis_iceberg_spark.queries.dedup import (
     _brute_cosine_pairs,
-    _dot,
     _emb_norms,
     dedup_embedding_kmeans_candidates,
 )
@@ -75,7 +75,7 @@ def run(sf_dir: str) -> None:
                 .join(F.broadcast(vb), "vec_b")
                 .filter(
                     F.try_divide(
-                        _dot(F.col("va"), F.col("vb")), F.col("na") * F.col("nb")
+                        dot(F.col("va"), F.col("vb")), F.col("na") * F.col("nb")
                     )
                     >= 0.45
                 )

@@ -213,12 +213,14 @@ def kmeans_mode() -> None:
 
     # phase-by-phase: the same steps dedup_embedding_kmeans_candidates
     # composes, materialized separately so each wall is attributable
-    clean, _dim, n_clean = clean_embeddings(emb)
+    clean, dim, n_clean = clean_embeddings(emb)
     k = min(dedup._kmeans_k(n_clean), n_clean)
     nprobe = nprobe_override or dedup._kmeans_nprobe(k)
 
     t0 = time.perf_counter()
-    centers = dedup._kmeans_fit_centers(spark, clean, k=k, n=n_clean, seed=42)
+    centers = dedup._kmeans_fit_centers(
+        spark, clean, k=k, n=n_clean, seed=42, dim=dim
+    )
     t_fit = time.perf_counter() - t0
 
     t0 = time.perf_counter()

@@ -37,9 +37,9 @@ def main() -> None:
     # 30-line tail it guards).
     from pyspark.sql import functions as F
 
+    from thesis_iceberg_spark.operators.vector import dot
     from thesis_iceberg_spark.queries.dedup import (
         _cluster_centroids,
-        _dot,
         _emb_norms,
         connected_components,
         dedup_embedding_lsh_pairs,
@@ -62,13 +62,13 @@ def main() -> None:
         cn = (
             centroids.join(F.broadcast(wl), "label")
             .select("label", F.slice(F.col("c"), F.lit(1), F.col("w")).alias("c"))
-            .select("label", "c", F.sqrt(_dot(F.col("c"), F.col("c"))).alias("cn"))
+            .select("label", "c", F.sqrt(dot(F.col("c"), F.col("c"))).alias("cn"))
         )
         cos = members.join(F.broadcast(cn), "label").select(
             "label",
             "vec_id",
             F.coalesce(
-                F.try_divide(_dot(F.col("v"), F.col("c")), F.col("nm") * F.col("cn")),
+                F.try_divide(dot(F.col("v"), F.col("c")), F.col("nm") * F.col("cn")),
                 F.lit(float("inf")),
             ).alias("cos_c"),
         )

@@ -4,7 +4,9 @@ property-based testing complements the oracle harness)."""
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -16,7 +18,8 @@ def test_kmeans_ivf_recall_vs_brute_force(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from thesis_iceberg_spark.operators.ann import build_ivf_index, ivf_topk
-    from thesis_iceberg_spark.queries.similarity import _cosine, _vecs
+    from thesis_iceberg_spark.operators.vector import cosine
+    from thesis_iceberg_spark.queries.similarity import _vecs
 
     e = _vecs(spark, sf_dir)
     qid = e.agg(F.min("vec_id")).first()[0]
@@ -24,7 +27,7 @@ def test_kmeans_ivf_recall_vs_brute_force(spark, sf_dir):
     brute = (
         e.crossJoin(F.broadcast(qv))
         .filter(F.col("vec_id") != qid)
-        .select("vec_id", _cosine(F.col("v"), F.col("qv")).alias("cosine"))
+        .select("vec_id", cosine(F.col("v"), F.col("qv")).alias("cosine"))
         .orderBy(F.col("cosine").desc(), F.col("vec_id"))
         .limit(10)
     )
@@ -32,17 +35,26 @@ def test_kmeans_ivf_recall_vs_brute_force(spark, sf_dir):
 
     from thesis_iceberg_spark.sources.registry import load_table
 
-    indexed, model = build_ivf_index(spark, load_table(spark, sf_dir, "embeddings"), k=8)
-    approx = ivf_topk(spark, indexed, model, qid, top_k=10, nprobe=4)
+    indexed, centers = build_ivf_index(spark, load_table(spark, sf_dir, "embeddings"), k=8)
+    assert centers.shape == (8, len(qv.first()[0])) and centers.dtype == np.float64
+    approx = ivf_topk(spark, indexed, centers, qid, top_k=10, nprobe=4)
     got = {r.vec_id for r in approx.collect()}
     recall = len(got & truth) / len(truth)
     # nprobe=4 of k=8 scans ~half the corpus; on this synthetic data the
     # top neighbors concentrate, so recall should be substantial
     assert recall >= 0.5, f"IVF recall too low: {recall} (got {got}, truth {truth})"
     # determinism: same seed -> same assignment -> same result
-    indexed2, model2 = build_ivf_index(spark, load_table(spark, sf_dir, "embeddings"), k=8)
-    got2 = {r.vec_id for r in ivf_topk(spark, indexed2, model2, qid, top_k=10, nprobe=4).collect()}
+    indexed2, centers2 = build_ivf_index(spark, load_table(spark, sf_dir, "embeddings"), k=8)
+    assert np.array_equal(centers, centers2)
+    got2 = {r.vec_id for r in ivf_topk(spark, indexed2, centers2, qid, top_k=10, nprobe=4).collect()}
     assert got == got2
+
+
+def test_build_ivf_index_requires_vec_id(spark):
+    from thesis_iceberg_spark.operators.ann import build_ivf_index
+
+    with pytest.raises(ValueError, match="vec_id"):
+        build_ivf_index(spark, spark.createDataFrame([([1.0, 0.0],)], "embedding ARRAY<DOUBLE>"))
 
 
 # --- hypothesis properties (no Spark needed) ------------------------------

@@ -35,4 +35,14 @@ def test_fit_sample_in_budget_still_fits(spark, sf_dir):
     centers = _kmeans_fit_centers(
         spark, clean, k=8, n=n_clean, seed=42, dim=dim
     )
-    assert len(centers) == 8 and len(centers[0]) == dim
+    assert centers.shape == (8, dim)
+
+
+def test_dim_is_a_required_keyword(spark):
+    """A defaulted dim=0 would zero the byte estimate and silently turn
+    the guard off; the call must name the width."""
+    from thesis_iceberg_spark.queries.dedup import _kmeans_fit_centers
+
+    df = spark.createDataFrame([(1, [1.0])], "vec_id BIGINT, embedding ARRAY<DOUBLE>")
+    with pytest.raises(TypeError, match="dim"):
+        _kmeans_fit_centers(spark, df, k=2, n=1, seed=42)

@@ -6,22 +6,10 @@ be value-oracled; this is the production variant: centroids LEARNED with
 a seeded k-means fit, vectors assigned at "index build" time, queries
 probing only the nprobe nearest buckets.
 
-r16 optimization round (VERDICT r15 #3, guide §1.2 step 1 / §5): the fit
-was pyspark.ml KMeans — ~25 scheduler round-trips per call (distributed
-k-means|| init + Lloyd jobs) plus a SINGLE-THREADED O(k^2 d) LocalKMeans
-reduction on the driver — for a quantizer whose quality needs only tens
-of points per centroid.  It is now the same faiss-style shape the dedup
-kmeans path adopted in r15: a bounded deterministic sample (20 rows per
-centroid) is collected once via Arrow and fit with a local seeded
-EUCLIDEAN Lloyd (zero-norm rows are fine under Euclidean, preserving the
-old MLlib tolerance the dedup fallback relies on), and assignment runs
-as ONE shuffle-free Arrow mapInPandas over the corpus.  Measured
-(tests/exp_r16_ivf_fit_ab.py, sf0.1): build + assignment drops from 34
-Spark jobs / 1.45 s to 4 jobs / 0.42 s (0.29x); recall@10 at nprobe=4
-reads 0.80 vs the gate's 0.5 (the full-corpus MLlib fit read 1.00 — the
-sample-fit trade, margin restored by IVF_FIT_ROWS_FLOOR); the gate
-query stays oracle-green at all three SFs and the recall/determinism
-pytest holds.
+The fit is the faiss-style shape: a bounded deterministic sample (20 rows
+per centroid, IVF_FIT_ROWS_FLOOR at least) is collected once via Arrow and
+fit with the local seeded Euclidean Lloyd (vector.fit_centroids); the
+assignment is ONE shuffle-free Arrow mapInPandas over the corpus.
 
 At 100 TB the assignment is the write-time partition key (one pass at
 ingest); a query then scans nprobe/k of the corpus — the same partition-
@@ -31,100 +19,49 @@ balance on real embedding distributions.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+import numpy as np
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from thesis_iceberg_spark.operators.vector import collect_matrix, cosine, fit_centroids
 
 IVF_FIT_ROWS_PER_CENTROID = 20  # quantizer quality needs tens of
 # points per centroid, not the corpus (the r15 dedup-kmeans evidence)
 IVF_FIT_ROWS_FLOOR = 1024  # at the small k this operator runs (k=8),
 # 20*k rows is a noisy quantizer sample; a ~1k floor costs nothing at
 # any scale (still a bounded driver collect) and measurably steadies
-# the recall margin (0.60 -> 0.80 at sf0.1, exp_r16_ivf_fit_ab.py)
-IVF_LOCAL_FIT_ITERS = 20  # pyspark.ml KMeans' default maxIter
-
-
-def _dot(u: Column, w: Column) -> Column:
-    return F.aggregate(F.zip_with(u, w, lambda x, y: x * y), F.lit(0.0), lambda a, p: a + p)
-
-
-def _cosine(u: Column, w: Column) -> Column:
-    # try_divide: zero-norm vectors yield NULL (sorts last in both Spark
-    # and DuckDB under DESC) instead of throwing under ANSI
-    return F.try_divide(_dot(u, w), F.sqrt(_dot(u, u)) * F.sqrt(_dot(w, w)))
-
-
-class LocalKMeansModel:
-    """Minimal stand-in for the pyspark.ml KMeansModel surface the IVF
-    callers use: ``clusterCenters()`` returning a list of ndarray
-    centers.  Carrying it (instead of bare centers) keeps
-    build_ivf_index's (indexed, model) contract unchanged."""
-
-    def __init__(self, centers):
-        self._centers = list(centers)
-
-    def clusterCenters(self):
-        return self._centers
-
-
-def _fit_centroids_euclidean(
-    X, k: int, seed: int, iters: int = IVF_LOCAL_FIT_ITERS
-):
-    """Local seeded Euclidean Lloyd over the (m x d) fit sample.
-
-    Deterministic: seeded init (k distinct sample rows), fixed iteration
-    count, argmin ties -> lowest centroid id (numpy argmin contract);
-    empty clusters reseed from a seeded permutation.  Zero-norm rows are
-    ordinary points under Euclidean distance — the tolerance the
-    replaced pyspark.ml fit had, which dedup._kmeans_fit_centers'
-    fallback path depends on.  Returns a (k x d) float64 array."""
-    import numpy as np
-
-    X = np.ascontiguousarray(X, dtype=np.float64)
-    m, d = X.shape
-    if m < k:
-        raise ValueError(
-            f"euclidean fit needs >= k sample rows (k={k}, sample={m})"
-        )
-    rng = np.random.default_rng(seed)
-    C = X[rng.choice(m, size=k, replace=False)].copy()
-    assign = np.empty(m, dtype=np.int64)
-    for _ in range(iters):
-        # argmin ||x-c||^2 == argmin (||c||^2 - 2 x.c): one GEMM per pass
-        d2 = (C * C).sum(axis=1)[None, :] - 2.0 * (X @ C.T)
-        assign = np.argmin(d2, axis=1)
-        counts = np.bincount(assign, minlength=k)
-        C_new = np.zeros((k, d), dtype=np.float64)
-        for j in range(d):
-            C_new[:, j] = np.bincount(assign, weights=X[:, j], minlength=k)
-        nz = counts > 0
-        C_new[nz] /= counts[nz, None]
-        if not nz.all():
-            # reseed dead centroids from a seeded permutation of the sample
-            C_new[~nz] = X[rng.permutation(m)[: int((~nz).sum())]]
-        C = C_new
-    return C
+# the recall margin (0.60 -> 0.80 at sf0.1, OPTIMIZATION_r16.md #5)
+IVF_LOCAL_FIT_ITERS = 20
 
 
 def build_ivf_index(
     spark: SparkSession, embeddings: DataFrame, k: int = 8, seed: int = 42
-) -> tuple[DataFrame, LocalKMeansModel]:
+) -> tuple[DataFrame, np.ndarray]:
     """Fit seeded k-means on a bounded sample of the embedding column;
     returns (corpus with a ``bucket`` column — the learned inverted-file
-    assignment, fitted model).
+    assignment, the (k x d) float64 centroid matrix).
+
+    Input contract: ``embeddings`` needs ``vec_id`` (the deterministic
+    undershoot re-collect orders by it, and ivf_topk looks the query up
+    by it) and ``embedding``; a frame without ``vec_id`` raises
+    ValueError before any Spark job runs.
 
     Degenerate rows: NULL embeddings and rows whose width differs from the
     corpus's canonical dimension (the modal width) are excluded from BOTH
     fit and assignment — a wrong-width vector has no meaningful bucket.
 
-    Fit: IVF_FIT_ROWS_PER_CENTROID rows per centroid, sampled
-    deterministically and collected once via Arrow (driver-bounded by
-    construction: 20*k*d doubles), then the local Euclidean Lloyd above.
+    Fit: IVF_FIT_ROWS_PER_CENTROID rows per centroid (IVF_FIT_ROWS_FLOOR
+    at least), sampled deterministically and collected once via Arrow,
+    then the local Euclidean Lloyd (vector.fit_centroids).
     Assignment: one shuffle-free Arrow mapInPandas — the centroid matrix
     rides the closure (k x d doubles), argmin per batch is a single GEMM,
     ties break to the lowest centroid id."""
-    import numpy as np
-
-    clean, dim, n_clean = clean_embeddings(embeddings)
+    if "vec_id" not in embeddings.columns:
+        raise ValueError(
+            "build_ivf_index: input needs a vec_id column (the fit re-collect "
+            f"orders by it, ivf_topk probes by it); got {embeddings.columns}"
+        )
+    clean, _, n_clean = clean_embeddings(embeddings)
     if n_clean < 2:
         raise ValueError(
             "build_ivf_index: fewer than 2 clean (non-null, modal-width) "
@@ -137,47 +74,23 @@ def build_ivf_index(
     fit_df = clean
     if n_clean > fit_rows:
         fit_df = clean.sample(fraction=min(1.0, 1.05 * fit_rows / n_clean), seed=seed)
-    tbl = fit_df.select(
-        F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    ).toArrow()
-    col = tbl.column("v").combine_chunks()
-    X = (
-        col.flatten()
-        .to_numpy(zero_copy_only=False)
-        .astype(np.float64, copy=False)
-        .reshape(-1, dim)
-    )
+    X = collect_matrix(fit_df, "embedding", np.float64)
     if X.shape[0] < k:
         # binomial sampling undershot k rows (probabilistically dead with
         # the 1.05 * 20x margin): deterministic bounded re-collect
-        tbl = (
-            clean.orderBy("vec_id")
-            .limit(fit_rows)
-            .select(F.transform("embedding", lambda x: x.cast("double")).alias("v"))
-            .toArrow()
-        )
-        col = tbl.column("v").combine_chunks()
-        X = (
-            col.flatten()
-            .to_numpy(zero_copy_only=False)
-            .astype(np.float64, copy=False)
-            .reshape(-1, dim)
-        )
-    C = _fit_centroids_euclidean(X, k=k, seed=seed)
+        X = collect_matrix(clean.orderBy("vec_id").limit(fit_rows), "embedding", np.float64)
+    C = fit_centroids(X, k, seed, IVF_LOCAL_FIT_ITERS, spherical=False)
 
     from pyspark.sql.types import IntegerType, StructField, StructType
 
     out_schema = StructType(
         list(clean.schema.fields) + [StructField("bucket", IntegerType())]
     )
-    centers_list = [[float(x) for x in row] for row in C]
 
     def assign(batches):
         import numpy as np
-        import pandas as pd  # noqa: F401
 
-        Cl = np.asarray(centers_list, dtype=np.float64)
-        half_c2 = (Cl * Cl).sum(axis=1) * 0.5
+        half_c2 = (C * C).sum(axis=1) * 0.5
         for pdf in batches:
             if not len(pdf):
                 pdf["bucket"] = np.array([], dtype=np.int32)
@@ -189,13 +102,13 @@ def build_ivf_index(
             # argmin ||x-c||^2 == argmin (||c||^2/2 - x.c); numpy argmin
             # returns the FIRST minimal index = lowest centroid id on ties
             pdf = pdf.copy()
-            pdf["bucket"] = np.argmin(half_c2[None, :] - A @ Cl.T, axis=1).astype(
+            pdf["bucket"] = np.argmin(half_c2[None, :] - A @ C.T, axis=1).astype(
                 np.int32
             )
             yield pdf
 
     indexed = clean.mapInPandas(assign, out_schema)
-    return indexed, LocalKMeansModel([np.asarray(c) for c in centers_list])
+    return indexed, C
 
 
 def clean_embeddings(embeddings: DataFrame) -> tuple[DataFrame, int, int]:
@@ -223,20 +136,17 @@ def clean_embeddings(embeddings: DataFrame) -> tuple[DataFrame, int, int]:
 def ivf_topk(
     spark: SparkSession,
     indexed: DataFrame,
-    model,
+    centers: np.ndarray,
     query_vec_id: int,
     top_k: int = 10,
     nprobe: int = 2,
 ) -> DataFrame:
     """Top-k cosine neighbors of ``query_vec_id`` probing only the nprobe
-    centroids closest to the query."""
-    import numpy as np
-
+    ``centers`` (build_ivf_index's k x d matrix) closest to the query."""
     q_row = indexed.filter(F.col("vec_id") == query_vec_id).select("embedding").first()
     if q_row is None:
         raise KeyError(f"vec_id {query_vec_id} not found")
     q = np.asarray(q_row[0], dtype=np.float64)
-    centers = model.clusterCenters()
 
     def cos(a, b):
         # zero-norm guard: NaN would make the probe sort arbitrary; -inf
@@ -244,16 +154,14 @@ def ivf_topk(
         d = np.linalg.norm(a) * np.linalg.norm(b)
         return float(np.dot(a, b) / d) if d > 0 else float("-inf")
 
-    probe = sorted(
-        range(len(centers)), key=lambda i: (-cos(q, np.asarray(centers[i])), i)
-    )[:nprobe]
+    probe = sorted(range(len(centers)), key=lambda i: (-cos(q, centers[i]), i))[:nprobe]
 
     qv = F.array(*[F.lit(float(x)) for x in q])
     v = F.transform("embedding", lambda x: x.cast("double"))
     return (
         indexed.filter(F.col("bucket").isin(probe))
         .filter(F.col("vec_id") != query_vec_id)
-        .select("vec_id", "label", "bucket", _cosine(v, qv).alias("cosine"))
+        .select("vec_id", "label", "bucket", cosine(v, qv).alias("cosine"))
         .orderBy(F.col("cosine").desc(), F.col("vec_id"))
         .limit(top_k)
     )

@@ -30,6 +30,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from thesis_iceberg_spark.operators.vector import collect_matrix, dot, fit_centroids
 from thesis_iceberg_spark.queries import REGISTRY, register
 from thesis_iceberg_spark.queries.textnorm import certify_py, fold_col, fold_py, fold_sql
 from thesis_iceberg_spark.sources.registry import load_table
@@ -752,15 +753,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _docs(spark, sf_dir).select("doc_id", simhash.alias("simhash"))
 
 
-def _dot(u, w):
-    """Exact double dot product as a sequential HOF fold — DuckDB's
-    list_dot_product over DOUBLE[] reproduces it bit-for-bit (measured
-    faster than an unrolled codegen expression, see PERFORMANCE.md)."""
-    return F.aggregate(
-        F.zip_with(u, w, lambda x, y: x * y), F.lit(0.0), lambda acc, p: acc + p
-    )
-
-
 def _np_brute_pairs(tbl, threshold: float = 0.45) -> list[tuple[int, int]]:
     """(vec_a, vec_b) with vec_a < vec_b and cosine >= ``threshold`` over
     a BOUNDED Arrow table of (vec_id, v: list<double>) — the driver-side
@@ -833,7 +825,7 @@ def _brute_cosine_pairs(spark: SparkSession, e: DataFrame) -> DataFrame:
     O(n^2) by definition — callers must bound n (the registered kmeans
     self-check samples its input down to BRUTE_CHECK_CEILING vectors
     first; the full-corpus form above is pytest-only)."""
-    n = e.select("vec_id", "v", F.sqrt(_dot(F.col("v"), F.col("v"))).alias("nm"))
+    n = e.select("vec_id", "v", F.sqrt(dot(F.col("v"), F.col("v"))).alias("nm"))
     # the corpus arrives as one file split; spread the O(n^2) pair work
     # across all cores (stream side of the nested-loop join)
     a = n.repartition(int(spark.conf.get("spark.sql.shuffle.partitions"))).select(
@@ -847,7 +839,7 @@ def _brute_cosine_pairs(spark: SparkSession, e: DataFrame) -> DataFrame:
     # in both engines (DuckDB division by zero is NULL too — bit-parity
     # preserved for every non-degenerate pair)
     cos = F.try_divide(
-        _dot(F.col("va"), F.col("vb")), F.col("na") * F.col("nb")
+        dot(F.col("va"), F.col("vb")), F.col("na") * F.col("nb")
     )
     return (
         a.join(b, F.col("vec_a") < F.col("vec_b"))
@@ -1105,7 +1097,7 @@ def dedup_embedding_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             # false instead of throwing under ANSI (matches DuckDB's
             # NULL-on-zero-division; values identical otherwise)
             F.try_divide(
-                _dot(F.col("va"), F.col("vb")), F.col("na") * F.col("nb")
+                dot(F.col("va"), F.col("vb")), F.col("na") * F.col("nb")
             ).alias("cosine"),
         )
         .filter(F.col("cosine") >= 0.45)
@@ -1117,7 +1109,7 @@ def _emb_norms(raw: DataFrame) -> DataFrame:
     e = raw.select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
     )
-    return e.select("vec_id", "v", F.sqrt(_dot(F.col("v"), F.col("v"))).alias("nm"))
+    return e.select("vec_id", "v", F.sqrt(dot(F.col("v"), F.col("v"))).alias("nm"))
 
 
 def _bucket_candidates(buckets: DataFrame, overflow_hint: str) -> DataFrame:
@@ -1416,41 +1408,7 @@ def _kmeans_nprobe(k: int) -> int:
 # so fit cost is bounded by 20*k^2 distance evals per iteration.
 KMEANS_K_FINE_CAP = 65536
 KMEANS_FIT_ROWS_PER_CENTROID = 20
-# Past this k the fit uses the local BLAS-3 spherical Lloyd on the
-# (already driver-sized) fit sample instead of pyspark.ml KMeans: MLlib's
-# k-means|| init collects ~2*k*initSteps weighted candidates and runs
-# LocalKMeans on them SINGLE-THREADED on the driver — O(k^2 * d * iters)
-# work that dominates everything else by k ~ 10^4 (measured: the 1e6-row
-# rehearsal's k=15.8k fit never finished under it).  The local fit is the
-# faiss-style production shape anyway: train the quantizer on a bounded
-# sample near the driver, assign distributed.
-#
-# 0 since r15 (the optimization round): the small-k regime now rides the
-# local fit too.  History: the threshold sat at 4096 because under the
-# r9/r10 sizing rule (k=128, p=3 at the driver corpora) every local init
-# measured BELOW the 0.7 candidate-recall gate (0.646-0.681) while
-# MLlib's k-means|| scraped by at 0.708 — PERFORMANCE.md round-10
-# "measured dead end".  The r11 re-sizing (KMEANS_MIN_K 128 -> 256,
-# p 3 -> 5) moved the operating point off that knife edge: re-running
-# the committed harness (tests/exp_local_fit_init.py) plus the shipped
-# random-init spherical Lloyd at k=256/p=5 over 5 seeds measures recall
-# min 0.799 at sf0.1 (0.799/0.806/0.840/0.861/0.847) and >= 0.929 at
-# sf0.001/sf0.01 — the same +0.09 floor margin as MLlib's 0.79-0.90
-# (exp_kmeans_margin_sweep).  What the swap buys, measured at sf0.1
-# (k=256, n=2000, same JVM, interleaved): pyspark.ml fit ~2.5 s of
-# distributed kmeans|| init + 20 Lloyd jobs vs ~0.15 s local BLAS — the
-# single biggest fixed cost in dedup_embedding_kmeans_pairs, and at
-# cluster scale ~25 fewer scheduler round-trips per fit.  The registered
-# query's OUTPUT (n_docs, subquadratic_ok, recall_ok) is unchanged: both
-# gates hold with margin (re-verified at all three SFs + the planted-
-# corpus pytest gates).
-KMEANS_LOCAL_FIT_K_THRESHOLD = 0
-# If the fit SAMPLE has fewer than k non-degenerate (non-zero-norm) rows
-# the spherical fit raises; up to this k the old pyspark.ml Euclidean fit
-# (which tolerates zero-norm rows) is an affordable fallback — past it,
-# fail loudly (MLlib's driver-bound init is the measured non-starter).
-KMEANS_MLLIB_FALLBACK_MAX_K = 4096
-KMEANS_LOCAL_FIT_ITERS = 10
+KMEANS_LOCAL_FIT_ITERS = 10  # Lloyd passes of the local fit (vector.fit_centroids)
 # Ceiling on the brute-force recall DENOMINATOR inside the registered
 # kmeans self-check (dedup_embedding_kmeans_pairs): above this many
 # vectors the ground-truth pair list is computed on a deterministic
@@ -1475,63 +1433,6 @@ def _kmeans_k(n: int) -> int:
     return max(KMEANS_K_FINE_CAP, n * p * p // (2 * _CAND_PER_DOC_BUDGET))
 
 
-def _fit_centroids_spherical(X, k: int, seed: int, iters: int = KMEANS_LOCAL_FIT_ITERS):
-    """Local spherical k-means (cosine Lloyd) for the large-k fit regime.
-
-    ``X`` is the (m x d) fit sample; rows are L2-normalized so Euclidean
-    Lloyd == cosine Lloyd — matching the cosine the assign kernel and the
-    verify filter use (the pyspark.ml small-k path fits unnormalized
-    Euclidean, which agrees in ordering only approximately; for bucketing
-    both work, but the large-k path might as well be exactly spherical).
-    Assignment is chunked (rows x d) @ (d x k) BLAS-3 in float32 — the
-    whole point vs MLlib's per-pair distance loop and single-threaded
-    k-means|| LocalKMeans init.  Deterministic: seeded init (k distinct
-    sample rows), fixed iteration count, argmax ties -> lowest centroid
-    id (numpy argmax contract); empty clusters reseed from a seeded
-    permutation.  Returns a (k x d) float64 list-of-lists for the assign
-    kernel's closure."""
-    import numpy as np
-
-    X = np.ascontiguousarray(X, dtype=np.float32)
-    norms = np.linalg.norm(X, axis=1)
-    # zero-norm rows have no direction: they would argmax to centroid 0
-    # every iteration (all-zero scores -> first index) and a seeded init
-    # or reseed could pick one as a permanently-dead centroid — drop them
-    # from the fit sample, matching the assign kernel and build_ivf_index
-    nz_rows = norms > 0
-    X = X[nz_rows] / norms[nz_rows][:, None]
-    m, d = X.shape
-    if m < k:
-        raise ValueError(
-            f"spherical fit needs >= k non-degenerate sample rows (k={k}, "
-            f"sample={m} after dropping zero-norm rows); "
-            "KMEANS_FIT_ROWS_PER_CENTROID guarantees 20x — a smaller "
-            "sample means the caller sized k off the wrong count"
-        )
-    rng = np.random.default_rng(seed)
-    C = X[rng.choice(m, size=k, replace=False)].copy()
-    chunk = max(1, (64 << 20) // (4 * k))  # ~64 MB of f32 scores per block
-    assign = np.empty(m, dtype=np.int64)
-    for _ in range(iters):
-        for lo in range(0, m, chunk):
-            hi = min(lo + chunk, m)
-            assign[lo:hi] = np.argmax(X[lo:hi] @ C.T, axis=1)
-        counts = np.bincount(assign, minlength=k)
-        C_new = np.zeros((k, d), dtype=np.float64)
-        for j in range(d):
-            C_new[:, j] = np.bincount(assign, weights=X[:, j], minlength=k)
-        nz = counts > 0
-        C_new[nz] /= counts[nz, None]
-        cn = np.linalg.norm(C_new, axis=1)
-        ok = nz & (cn > 0)
-        C_new[ok] /= cn[ok, None]
-        if not ok.all():
-            # reseed dead centroids from a seeded permutation of the sample
-            C_new[~ok] = X[rng.permutation(m)[: int((~ok).sum())]]
-        C = C_new.astype(np.float32)
-    return [[float(x) for x in row] for row in C]
-
-
 # Hard ceiling on the kmeans fit-sample COLLECT's bytes (r16, VERDICT
 # r15 #2 "what's wrong"): the local-fit sample is driver-sized by
 # construction (20*k rows x d floats), but "by construction" is an
@@ -1549,27 +1450,28 @@ def _kmeans_fit_centers(
     k: int,
     n: int,
     seed: int,
-    dim: int = 0,
-) -> list:
-    """Fit centroids for the kmeans-bounded candidate path on a
+    *,
+    dim: int,
+) -> "np.ndarray":
+    """(k x d) centroids for the kmeans-bounded candidate path, fit on a
     deterministic bounded sample (KMEANS_FIT_ROWS_PER_CENTROID rows per
     centroid — centroid QUALITY needs ~tens of points per cluster, not
-    the corpus, so fit cost is independent of corpus size).  Every k
-    regime now uses the local BLAS-3 spherical Lloyd above (r15 opt
-    round, guide §1.2 step 1): the sample is collected (driver-sized by
-    construction: 20*k rows * d floats, ~160 MB at the 1e6-corpus
-    k=15.8k, ~1.3 GB at the budget-regime 1e8 corpus) and fit locally —
-    the faiss shape: train the quantizer locally, assign distributed.
-    Fallback: a sample with fewer than k non-degenerate (non-zero-norm)
-    rows — only reachable on zero-norm-heavy corpora — retains the old
-    pyspark.ml Euclidean fit, which tolerates them, for k small enough
-    that MLlib's single-threaded O(k^2 d) k-means|| reduction is sane."""
+    the corpus, so fit cost is independent of corpus size).
+
+    ``clean`` is clean_embeddings' output and ``dim`` its modal width; the
+    driver-memory guard sizes the collect from it BEFORE any job runs.
+    The sample is collected once as float32 (~160 MB at the 1e6-corpus
+    k=15.8k, ~1.3 GB at the budget-regime 1e8 corpus) and fit with the
+    local spherical Lloyd — the faiss shape: train the quantizer locally,
+    assign distributed.  Fallback: a sample with fewer than k
+    non-zero-norm rows (only on zero-norm-heavy corpora) is fit with the
+    Euclidean Lloyd on the same sample, which keeps zero rows as ordinary
+    points; a sample with fewer than k rows at all raises."""
     fit_rows = KMEANS_FIT_ROWS_PER_CENTROID * k
-    # explicit driver-memory guard BEFORE any job runs (dim: the modal
-    # embedding width the caller already computed via clean_embeddings;
-    # 4 bytes/coord — the sample is collected as float32 — and the 1.05
-    # sampling margin): loud error with the sizing, never a driver OOM
-    est_bytes = int(min(fit_rows, n) * max(dim, 0) * 4 * 1.05)
+    # explicit driver-memory guard BEFORE any job runs (4 bytes/coord —
+    # the sample is collected as float32 — and the 1.05 sampling
+    # margin): loud error with the sizing, never a driver OOM
+    est_bytes = int(min(fit_rows, n) * dim * 4 * 1.05)
     if est_bytes > KMEANS_FIT_SAMPLE_MAX_BYTES:
         raise ValueError(
             f"kmeans fit sample would collect ~{est_bytes / 1e9:.1f} GB "
@@ -1583,45 +1485,13 @@ def _kmeans_fit_centers(
     fit_df = clean
     if n > fit_rows:
         fit_df = clean.sample(fraction=min(1.0, 1.05 * fit_rows / n), seed=seed)
-    if k <= KMEANS_LOCAL_FIT_K_THRESHOLD:
-        from thesis_iceberg_spark.operators.ann import build_ivf_index
-
-        _, model = build_ivf_index(spark, fit_df, k=k, seed=seed)
-        return [[float(x) for x in c] for c in model.clusterCenters()]
     import numpy as np
 
-    # Collect the sample as ONE Arrow table and view the list column's
-    # flat values buffer directly: toPandas() materialized a Python list
-    # object per row (+ np.stack's second copy), several times the raw
-    # sample bytes at budget-regime k — peak driver memory now tracks the
-    # ~20*k*d*4 B sample itself (ADVICE r9)
-    tbl = fit_df.select(
-        F.transform("embedding", lambda x: x.cast("float")).alias("v")
-    ).toArrow()
-    col = tbl.column("v").combine_chunks()
-    widths = np.diff(col.offsets.to_numpy(zero_copy_only=False))
-    d = int(widths[0]) if len(widths) else 0
-    if len(widths) and not (widths == d).all():
-        # clean_embeddings guarantees modal-width rows; a ragged sample
-        # means the caller bypassed it
-        raise ValueError("fit sample has ragged vector widths")
-    X = col.flatten().to_numpy(zero_copy_only=False).astype(np.float32, copy=False)
-    X = X.reshape(-1, d) if d else X.reshape(0, 0)
+    X = collect_matrix(fit_df, "embedding", np.float32)
     try:
-        return _fit_centroids_spherical(X, k=k, seed=seed)
+        return fit_centroids(X, k, seed, KMEANS_LOCAL_FIT_ITERS, spherical=True)
     except ValueError:
-        if k > KMEANS_MLLIB_FALLBACK_MAX_K:
-            # past this k MLlib's init is the measured non-starter (the
-            # 1e6 rehearsal's k=15.8k fit never finished under it) — the
-            # loud spherical-fit error is the right outcome
-            raise
-        # fewer than k non-degenerate sample rows (zero-norm-heavy
-        # corpus): the Euclidean pyspark.ml fit tolerates zero-norm rows
-        # and is affordable at this k — preserve the old behavior there
-        from thesis_iceberg_spark.operators.ann import build_ivf_index
-
-        _, model = build_ivf_index(spark, fit_df, k=k, seed=seed)
-        return [[float(x) for x in c] for c in model.clusterCenters()]
+        return fit_centroids(X, k, seed, KMEANS_LOCAL_FIT_ITERS, spherical=False)
 
 
 def dedup_embedding_kmeans_candidates(
@@ -1635,11 +1505,9 @@ def dedup_embedding_kmeans_candidates(
     """Distinct (vec_a, vec_b) near-dup candidates from seeded-KMeans
     buckets with multi-probe assignment.
 
-    Shape: one seeded KMeans fit on a bounded sample (pyspark.ml below
-    KMEANS_LOCAL_FIT_K_THRESHOLD, BLAS-3 local spherical Lloyd above it —
-    at 100 TB: fit on a sample, assign at write time), then assignment
-    as ONE shuffle-free Arrow
-    mapInPandas — the centroid matrix rides the closure (k x d doubles;
+    Shape: one seeded local spherical Lloyd fit on a bounded sample
+    (_kmeans_fit_centers — at 100 TB: fit on a sample, assign at write
+    time), then assignment as ONE shuffle-free Arrow mapInPandas — the centroid matrix rides the closure (k x d doubles;
     ~0.5 MB at k=1000, d=64 — broadcast territory well past 1e5
     centroids) and each batch is a single vectorized matmul emitting
     nprobe (vec_id, cid) rows per vector.  Candidates come from the same
@@ -1687,7 +1555,7 @@ def _kmeans_assign_kernel(centers, nprobe: int):
     batches — ragged/NULL/zero-norm rows, exact cosine ties — against a
     per-vector reference loop.  Deterministic contract: top-nprobe by
     (-cosine, centroid_id); NULL / wrong-width / zero-norm vectors emit no
-    rows (build_ivf_index excluded them from the fit too)."""
+    rows (clean_embeddings excluded them from the fit too)."""
 
     def assign_udf(batches):
         import numpy as np
@@ -1726,7 +1594,7 @@ def _kmeans_assign_kernel(centers, nprobe: int):
         BOUNDARY_GAP = max(1e-6, d_ * float(np.finfo(np.float32).eps))
         for pdf in batches:
             vecs = pdf["v"].to_numpy()
-            # NULL or wrong-width vectors get no bucket (build_ivf_index
+            # NULL or wrong-width vectors get no bucket (clean_embeddings
             # excluded them from the fit too)
             valid = np.fromiter(
                 (v is not None and len(v) == d_ for v in vecs),
@@ -1845,7 +1713,7 @@ def dedup_embedding_kmeans_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         # filtered, not throw DIVIDE_BY_ZERO under ANSI (Spark 4 default)
         .filter(
             F.try_divide(
-                _dot(F.col("va"), F.col("vb")), F.col("na") * F.col("nb")
+                dot(F.col("va"), F.col("vb")), F.col("na") * F.col("nb")
             )
             >= 0.45
         )
@@ -1877,8 +1745,7 @@ def dedup_embedding_kmeans_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ground-truth pair list is ONE Arrow collect + a dense driver-side
     # GEMM (_np_brute_pairs) instead of a 500k-fold nested-loop join +
     # checkpoint + two more jobs — same exclusion semantics, counts-only
-    # consumer, ~1 s -> ~ms at sf0.1 (interleaved A/B in
-    # tests/exp_r15_kmeans_fit_ab.py covers the whole query).
+    # consumer, ~1 s -> ~ms at sf0.1 (PERFORMANCE.md, round 15).
     brute_pairs = _np_brute_pairs(e.select("vec_id", "v").toArrow())
     n_cand = cand.count()
     n_brute = len(brute_pairs)
@@ -2098,7 +1965,7 @@ def semdedup_keepers(
     # perfectly well-defined cosine (zip_with pads nothing when lengths
     # match), can pass the 0.45 pair filter, and form a cluster of their
     # own.  A corpus-modal dim would give that cluster a centroid with
-    # NULLs at every position past the members' width, turning _dot(c,c)
+    # NULLs at every position past the members' width, turning dot(c,c)
     # and all cos_c NULL -> +inf and silently degrading the paper's
     # keeper to min-id — while the DuckDB oracle (per-position unnest
     # over the members' ACTUAL widths) picks the true centroid-far
@@ -2131,7 +1998,7 @@ def semdedup_keepers(
     cn = (
         centroids.join(F.broadcast(wl), "label")
         .select("label", F.slice(F.col("c"), F.lit(1), F.col("w")).alias("c"))
-        .select("label", "c", F.sqrt(_dot(F.col("c"), F.col("c"))).alias("cn"))
+        .select("label", "c", F.sqrt(dot(F.col("c"), F.col("c"))).alias("cn"))
     )
     cos = (
         members.join(F.broadcast(cn), "label")
@@ -2146,7 +2013,7 @@ def semdedup_keepers(
             # to min vec_id — still deterministic)
             F.coalesce(
                 F.try_divide(
-                    _dot(F.col("v"), F.col("c")), F.col("nm") * F.col("cn")
+                    dot(F.col("v"), F.col("c")), F.col("nm") * F.col("cn")
                 ),
                 F.lit(float("inf")),
             ).alias("cos_c"),

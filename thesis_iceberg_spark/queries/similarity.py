@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from thesis_iceberg_spark.operators.vector import cosine
 from thesis_iceberg_spark.queries import register
 from thesis_iceberg_spark.sources.registry import load_table
 
@@ -39,19 +40,6 @@ def _vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "label",
         F.transform("embedding", lambda x: x.cast("double")).alias("v"),
     )
-
-
-def _dot(u: Column, w: Column) -> Column:
-    """Exact sequential-fold dot product (matches DuckDB list_dot_product)."""
-    return F.aggregate(F.zip_with(u, w, lambda x, y: x * y), F.lit(0.0), lambda acc, p: acc + p)
-
-
-def _cosine(u: Column, w: Column) -> Column:
-    # try_divide: a zero-norm vector yields NULL cosine instead of
-    # throwing DIVIDE_BY_ZERO under ANSI (Spark 4 default).  Exact oracle
-    # parity: DuckDB division by zero is NULL too, and BOTH engines sort
-    # NULLs LAST under ORDER BY ... DESC, so the top-k rankings agree.
-    return F.try_divide(_dot(u, w), F.sqrt(_dot(u, u)) * F.sqrt(_dot(w, w)))
 
 
 def _int8_quantize(col: Column) -> Column:
@@ -96,7 +84,7 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         e.crossJoin(F.broadcast(qv))
         .filter(F.col("vec_id") != F.col("qid"))
-        .select("vec_id", "label", _cosine(F.col("v"), F.col("qv")).alias("cosine"))
+        .select("vec_id", "label", cosine(F.col("v"), F.col("qv")).alias("cosine"))
         .orderBy(F.col("cosine").desc(), F.col("vec_id"))
         .limit(TOP_K)
     )
@@ -119,7 +107,7 @@ def _assign_nearest_centroid(e: DataFrame, cent: DataFrame) -> DataFrame:
     semantics by construction; both value-oracled)."""
     top = F.max(
         F.struct(
-            _cosine(F.col("v"), F.col("cv")).alias("cos_c"),
+            cosine(F.col("v"), F.col("cv")).alias("cos_c"),
             (-F.col("cid")).alias("ncid"),
             F.col("label").alias("label"),
             F.col("v").alias("v"),
@@ -195,7 +183,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = e.orderBy("vec_id").limit(1).select(F.col("v").alias("qv"), F.col("vec_id").alias("qid"))
     probe = (
         cent.crossJoin(F.broadcast(q))
-        .select("cid", _cosine(F.col("qv"), F.col("cv")).alias("cos_q"))
+        .select("cid", cosine(F.col("qv"), F.col("cv")).alias("cos_q"))
         .orderBy(F.col("cos_q").desc(), F.col("cid"))
         .limit(N_PROBE)
         .select("cid")
@@ -204,7 +192,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         assigned.join(F.broadcast(probe), assigned.bucket == probe.cid, "left_semi")
         .crossJoin(F.broadcast(q))
         .filter(F.col("vec_id") != F.col("qid"))
-        .select("vec_id", "label", _cosine(F.col("v"), F.col("qv")).alias("cosine"), "bucket")
+        .select("vec_id", "label", cosine(F.col("v"), F.col("qv")).alias("cosine"), "bucket")
         .orderBy(F.col("cosine").desc(), F.col("vec_id"))
         .limit(TOP_K)
     )
@@ -217,8 +205,9 @@ SELECT CAST({TOP_K} AS BIGINT) AS top_k,
        CAST({TOP_K} AS BIGINT) AS n_returned,
        TRUE AS recall_ok
 """,
-    doc="Production IVF variant: centroids LEARNED with seeded KMeans "
-    "(pyspark.ml), corpus bucketed at index-build time, query probes its 4 "
+    doc="Production IVF variant: centroids LEARNED with a seeded local "
+    "Euclidean Lloyd fit on a bounded sample (operators/vector.py), corpus "
+    "bucketed at index-build time, query probes its 4 "
     "nearest of 8 buckets. The neighbor list itself is model-driven (no SQL "
     "oracle), so the oracle-able form is a SELF-CHECK: the query computes "
     "recall@10 against the exact brute-force top-10 IN SPARK and returns "
@@ -232,12 +221,12 @@ def ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from thesis_iceberg_spark.operators.ann import build_ivf_index, ivf_topk
 
     corpus = load_table(spark, sf_dir, "embeddings")
-    indexed, model = build_ivf_index(spark, corpus, k=N_CENTROIDS)
+    indexed, centers = build_ivf_index(spark, corpus, k=N_CENTROIDS)
     # qid from the INDEXED corpus, not the raw one: build_ivf_index drops
     # NULL/ragged rows, and a degenerate raw-minimum row would make
     # ivf_topk's lookup raise KeyError (review finding, round 7)
     qid = indexed.agg(FF.min("vec_id")).first()[0]
-    ivf = ivf_topk(spark, indexed, model, qid, top_k=TOP_K, nprobe=4)
+    ivf = ivf_topk(spark, indexed, centers, qid, top_k=TOP_K, nprobe=4)
 
     # exact brute-force top-k (the recall denominator), all Spark-side
     e = _vecs(spark, sf_dir)
@@ -245,7 +234,7 @@ def ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = (
         e.crossJoin(F.broadcast(qv))
         .filter(F.col("vec_id") != qid)
-        .select("vec_id", _cosine(F.col("v"), F.col("qv")).alias("cosine"))
+        .select("vec_id", cosine(F.col("v"), F.col("qv")).alias("cosine"))
         .orderBy(F.col("cosine").desc(), F.col("vec_id"))
         .limit(TOP_K)
         .select("vec_id", F.lit(True).alias("in_exact"))
@@ -336,7 +325,7 @@ def ann_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     w_probe = Window.partitionBy("qid").orderBy(F.col("cos_q").desc(), F.col("cid"))
     probe = (
         q.crossJoin(F.broadcast(cent))
-        .select("qid", "qv", "cid", _cosine(F.col("qv"), F.col("cv")).alias("cos_q"))
+        .select("qid", "qv", "cid", cosine(F.col("qv"), F.col("cv")).alias("cos_q"))
         .withColumn("rn", F.row_number().over(w_probe))
         .filter(F.col("rn") <= N_PROBE)
         .select("qid", "qv", F.col("cid").alias("bucket"))
@@ -345,7 +334,7 @@ def ann_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         assigned.join(F.broadcast(probe), "bucket")
         .filter(F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id", "label", _cosine(F.col("v"), F.col("qv")).alias("cosine"))
+        .select("qid", "vec_id", "label", cosine(F.col("v"), F.col("qv")).alias("cosine"))
         .withColumn("rn", F.row_number().over(w_rank))
         .filter(F.col("rn") <= BATCH_TOP_K)
         .select("qid", "vec_id", "label", "cosine")
@@ -475,7 +464,7 @@ def ann_int8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # covers near-tie neighbors the int8 grid cannot separate)
     return (
         top.select(
-            "vec_id", "label", "qdot", _cosine(F.col("v"), F.col("qv")).alias("cosine")
+            "vec_id", "label", "qdot", cosine(F.col("v"), F.col("qv")).alias("cosine")
         )
         .orderBy(F.col("cosine").desc(), F.col("vec_id"))
         .limit(TOP_K)
@@ -642,7 +631,7 @@ def ann_int8_topk_stored(spark: SparkSession, table, rerank: str = "isin") -> Da
         top.join(rerank_vecs, "vec_id")
         .crossJoin(F.broadcast(qrow.select("qv")))
         .select(
-            "vec_id", "label", "qdot", _cosine(F.col("v"), F.col("qv")).alias("cosine")
+            "vec_id", "label", "qdot", cosine(F.col("v"), F.col("qv")).alias("cosine")
         )
         .orderBy(F.col("cosine").desc(), F.col("vec_id"))
         .limit(TOP_K)
