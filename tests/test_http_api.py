@@ -160,3 +160,62 @@ def test_concurrent_reads_during_rename(spark, tmp_path):
             assert vals == {"alpha", "beta", "gamma"}, b["rows"]
     finally:
         server.shutdown()
+
+
+def test_metadata_parent_id_is_an_int_and_round_trips(spark, tmp_path):
+    """/history and /snapshots serve parent_id as an integer (or null), so
+    a client can feed it straight back as ?version=."""
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    df = spark.createDataFrame([(1, "a")], "id BIGINT, s STRING")
+    vt = cat.create_table("t", df=df, now_ms=1_000)
+    vt.append(df, now_ms=2_000)
+    api = Api(cat)
+    for route in ("history", "snapshots"):
+        status, rows = api.handle("GET", f"/t/{route}")
+        assert status == 200
+        assert [r["parent_id"] for r in rows] == [None, 1]
+        assert type(rows[1]["parent_id"]) is int
+        parent = json.loads(json.dumps(rows))[1]["parent_id"]
+        status, body = api.handle("GET", f"/t?version={parent}")
+        assert status == 200 and body == [{"id": 1, "s": "a"}]
+
+
+# Every Spark type's JSON form on a scan.  Doubles and floats are exact
+# and nullable integers stay integers; the other forms are the ones the
+# pandas to_json edge served before (dates and timestamps at millisecond
+# precision, decimals as numbers, binary as UTF-8 text).
+_FORMS_SQL = """SELECT * FROM VALUES
+ (1, CAST(630 AS BIGINT), 1.5e-11D, CAST(0.25 AS FLOAT), CAST('12.345' AS DECIMAL(10,3)),
+  'a"b', X'6869', true, DATE'2024-02-29', TIMESTAMP'2024-02-29 13:14:15.123456',
+  TIMESTAMP_NTZ'2024-02-29 13:14:15.987654', array(CAST(0.5 AS FLOAT), CAST(0.1 AS FLOAT)),
+  array(CAST(1 AS TINYINT), CAST(-3 AS TINYINT)), map('k', 1),
+  CAST(named_struct('x', 1, 'y', 'z') AS STRUCT<x: INT, y: STRING>), 0.1234567890123456D,
+  CAST(123456789012345678 AS BIGINT), CAST(5 AS SMALLINT), 1e20D, array(0.1234567890123456D)),
+ (2, NULL, CAST('NaN' AS DOUBLE), CAST('Infinity' AS FLOAT), NULL, NULL, NULL, NULL, NULL,
+  NULL, NULL, NULL, NULL, NULL, NULL, CAST('-Infinity' AS DOUBLE), NULL, NULL, NULL, NULL)
+AS t(i, nb, d, f, dec, s, b, bo, dt, ts, ntz, af, ai8, m, st, d2, big, sm, huge, ad)"""
+
+_FORMS_JSON = (
+    '[{"i": 1, "nb": 630, "d": 1.5e-11, "f": 0.25, "dec": 12.345, "s": "a\\"b", "b": "hi", '
+    '"bo": true, "dt": "2024-02-29T00:00:00.000", "ts": "2024-02-29T13:14:15.123", '
+    '"ntz": "2024-02-29T13:14:15.987", "af": [0.5, 0.10000000149011612], "ai8": [1, -3], '
+    '"m": {"k": 1}, "st": {"x": 1, "y": "z"}, "d2": 0.1234567890123456, '
+    '"big": 123456789012345678, "sm": 5, "huge": 1e+20, "ad": [0.1234567890123456]}, '
+    '{"i": 2, "nb": null, "d": null, "f": null, "dec": null, "s": null, "b": null, '
+    '"bo": null, "dt": null, "ts": null, "ntz": null, "af": null, "ai8": null, "m": null, '
+    '"st": null, "d2": null, "big": null, "sm": null, "huge": null, "ad": null}]'
+)
+
+
+def test_scan_json_forms_of_every_type(spark, tmp_path):
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    cat.create_table("forms", df=spark.sql(_FORMS_SQL), now_ms=1_000)
+    server, _thread = serve(Api(cat))
+    base = f"http://127.0.0.1:{server.server_address[1]}"
+    try:
+        with urllib.request.urlopen(base + "/forms") as r:
+            rows = json.loads(r.read())
+    finally:
+        server.shutdown()
+    rows.sort(key=lambda r: r["i"])
+    assert json.dumps(rows) == _FORMS_JSON

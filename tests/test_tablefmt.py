@@ -195,6 +195,28 @@ def test_api_view_survives_rename(spark, loc):
     assert report["schema_id"] == 1
 
 
+def test_api_view_resolves_and_reads_on_one_handle(spark, loc):
+    """A rename committed after the view loads the table's metadata must
+    not split one execution across two schemas: resolution and the read
+    use the same handle, so the view still resolves and reads."""
+    vt = VersionedTable.create(spark, loc, df=_toy(spark))
+    view = ApiView("people", vt, {"person_id": "id", "person_name": "name"})
+    loads = []
+
+    def load_then_rename():
+        table = VersionedTable(spark, loc)
+        loads.append(table)
+        if len(loads) == 1:  # another writer renames right after the load
+            VersionedTable(spark, loc).rename_column("name", "full_name")
+        return table
+
+    view._current_table = load_then_rename
+    got = {r.person_id: r.person_name for r in view.dataframe().collect()}
+    assert got == {1: "alice", 2: "bob", 3: "carol"}
+    assert len(loads) == 1  # one metadata load per execution
+    assert VersionedTable(spark, loc).columns == ["id", "full_name", "added_at"]
+
+
 def test_changelog_update_images_with_key(spark, loc):
     """changelog(key=...) retags delete+insert pairs sharing an identifier
     key as UPDATE_BEFORE/UPDATE_AFTER (Iceberg identifier-field semantics)

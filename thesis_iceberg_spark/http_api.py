@@ -29,6 +29,20 @@ Routes (mirroring the reference surface):
     PATCH  /<table>/rename_column/<old>/<new>   DDL (ref: api.py:351-363)
     PATCH  /<table>/add_column/<name>/<type>    DDL (ref: api.py:92-102)
 
+The metadata routes (history, snapshots, refs) serve rows built from the
+table's metadata JSON and run no Spark job.  Scans and column projections
+run one bounded Arrow collect, and each value is served as:
+
+    integer types           JSON integer (nullable ones too: 630, not 630.0)
+    float, double           the exact value (1.5e-11, 0.1234567890123456);
+                            NaN and +-Infinity as null
+    decimal                 JSON number (the value as a double)
+    date                    "YYYY-MM-DDT00:00:00.000"
+    timestamp, _ntz         "YYYY-MM-DDTHH:MM:SS.mmm" (milliseconds truncated;
+                            TIMESTAMP in the session time zone)
+    binary                  the bytes decoded as UTF-8
+    array, map, struct      JSON list / object of the forms above
+
 Scale note: querying stays fully distributed — the handler only collects
 the final limited projection. The dev server (ThreadingHTTPServer) matches
 the reference's Flask dev-server scope; production delivery would sit the
@@ -37,11 +51,15 @@ same handler functions behind a real WSGI front.
 
 from __future__ import annotations
 
+import functools
 import json
+import math
 import threading
+import zoneinfo
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, unquote, urlparse
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from thesis_iceberg_spark.functions.resolve import AMBIGUOUS, MATCH, NO_MATCH, match_column
@@ -57,11 +75,59 @@ class HttpError(Exception):
         self.message = message
 
 
+def _json_converter(t: pa.DataType, tz):
+    """The function turning one Arrow type's Python values into their JSON
+    forms (see the module docstring), or None when they are JSON-ready.
+    ``tz()`` gives the session time zone."""
+    if pa.types.is_floating(t):
+        return lambda v: v if math.isfinite(v) else None
+    if pa.types.is_timestamp(t):
+        return lambda v: (v.astimezone(tz()).replace(tzinfo=None) if v.tzinfo else v).isoformat(
+            timespec="milliseconds"
+        )
+    if pa.types.is_date(t):
+        return lambda v: v.isoformat() + "T00:00:00.000"
+    if pa.types.is_decimal(t):
+        return float
+    if pa.types.is_binary(t) or pa.types.is_large_binary(t):
+        return bytes.decode
+    if pa.types.is_map(t):
+        key = _json_converter(t.key_type, tz) or (lambda v: v)
+        item = _json_converter(t.item_type, tz) or (lambda v: v)
+        return lambda v: {key(k): None if x is None else item(x) for k, x in v}
+    if pa.types.is_list(t) or pa.types.is_large_list(t):
+        elem = _json_converter(t.value_type, tz)
+        if elem is None:
+            return None
+        return lambda v: [None if x is None else elem(x) for x in v]
+    if pa.types.is_struct(t):
+        convs = {f.name: _json_converter(f.type, tz) for f in t}
+        if not any(convs.values()):
+            return None
+        return lambda v: {
+            k: x if x is None or convs[k] is None else convs[k](x) for k, x in v.items()
+        }
+    return None
+
+
 def _records(df: DataFrame, limit: int) -> list[dict]:
-    """The reference's JSON edge (api.py:67): bounded collect of the final
-    projection; ``default=str``-compatible values only."""
-    pdf = df.limit(limit).toPandas()
-    return json.loads(pdf.to_json(orient="records", date_format="iso"))
+    """The reference's JSON edge (api.py:67): one bounded Arrow collect of
+    the final projection, converted value by value to the JSON forms the
+    module docstring lists (exact doubles, ints as ints)."""
+    table = df.limit(limit).toArrow()
+    # Arrow carries TIMESTAMP values as UTC instants; they are served as
+    # the session time zone's wall-clock time, as pandas served them
+    tz = functools.cache(
+        lambda: zoneinfo.ZoneInfo(df.sparkSession.conf.get("spark.sql.session.timeZone"))
+    )
+    convs = [(f.name, _json_converter(f.type, tz)) for f in table.schema]
+    return [
+        {
+            k: v if v is None or conv is None else conv(v)
+            for (k, conv), v in zip(convs, row.values())
+        }
+        for row in table.to_pylist()
+    ]
 
 
 class Api:
@@ -122,11 +188,17 @@ class Api:
         return {"requested": column, "resolved_to": resolved, "rows": _records(df, limit)}
 
     def metadata(self, name: str, which: str) -> list[dict]:
+        """A metadata table's rows, built from the table's metadata JSON and
+        served directly: no Spark job."""
         vt = self._table(name)
-        table_fn = {"history": vt.history, "snapshots": vt.snapshots, "refs": vt.refs}
-        if which not in table_fn:
+        rows_fn = {
+            "history": vt.history_rows,
+            "snapshots": vt.snapshot_rows,
+            "refs": vt.ref_rows,
+        }
+        if which not in rows_fn:
             raise HttpError(404, f"unknown metadata table {which!r}")
-        return _records(table_fn[which](), self.default_limit)
+        return rows_fn[which]()[: self.default_limit]
 
     # --- DDL -------------------------------------------------------------
 

@@ -105,15 +105,19 @@ _PRIORITY_CAP = 16  # window is 50; >=34 slots must remain for rotation —
 # the four ANN queries late in the round)
 
 DRIVER_WINDOW_PRIORITY: tuple[str, ...] = (
-    # connected_components' driver-local finish (union-find over one
-    # bounded Arrow collect) — its three consumers:
-    "dedup_semdedup_centroid_far",
-    "dedup_embedding_cluster_canonical",
-    "dedup_cluster_canonical",
-    # _bucket_candidates' defensive self-pair filter — both candidate
-    # paths that share it:
-    "dedup_embedding_lsh_pairs",
-    "dedup_embedding_kmeans_pairs",
+    # VersionedTable writes every file in its recorded schema and plans
+    # reads from the metadata (no footer inference): every registered
+    # query over a versioned table
+    "tablefmt_lifecycle_final_state",
+    "tablefmt_time_travel",
+    "tablefmt_changelog",
+    "tablefmt_schema_evolution",
+    "sql_time_travel",
+    "sql_dml_update_delete",
+    "tablefmt_quoted_identifiers",
+    "sql_ddl_lifecycle",
+    "tablefmt_merge_incremental",
+    "ann_int8_range_search_stored",
 )
 
 assert len(DRIVER_WINDOW_PRIORITY) <= _PRIORITY_CAP, (

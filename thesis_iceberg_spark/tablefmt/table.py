@@ -184,6 +184,20 @@ def _spark_type(ddl: str) -> T.DataType:
     return T._parse_datatype_string(ddl)
 
 
+def _q(name: str) -> str:
+    """Backtick-quote an identifier for SQL expression text."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _ddl(fields: list[_Field]) -> str:
+    """A reader schema in DDL form: the recorded names and types."""
+    return ", ".join(f"{_q(f.name)} {f.type}" for f in fields)
+
+
+# the fixed schema of every position-delete file (_write_delete_files)
+_POS_DELETE_DDL = "_del_file STRING, _del_pos BIGINT"
+
+
 def _schema_fields(df_schema: T.StructType, start_id: int = 1) -> list[_Field]:
     return [
         _Field(id=start_id + i, name=f.name, type=f.dataType.simpleString())
@@ -380,7 +394,13 @@ class VersionedTable:
                 if st is None or not st.has_min_max:
                     incomplete.add(name)
                     continue
-                lo, hi = st.min, st.max
+                try:
+                    lo, hi = st.min, st.max
+                except NotImplementedError:
+                    # pyarrow cannot decode some logical types' stats
+                    # (decimals stored as INT32/INT64): no bounds
+                    incomplete.add(name)
+                    continue
                 if hasattr(lo, "isoformat"):
                     # TIMESTAMP_MICROS stats come back TZ-AWARE from
                     # pyarrow; bounds parsed from predicates are naive
@@ -431,15 +451,21 @@ class VersionedTable:
         return sorted(out, key=lambda f: f["path"])
 
     def _write_data_files(self, df: DataFrame, snapshot_id: int) -> list[dict]:
-        """Write df as parquet under data/snap-<id>/ with the current schema's
-        column names; returns one manifest entry carrying the FILE LIST with
-        per-file row counts (Iceberg manifests are file-granular for the
-        same reason: file-level pruning needs file-level entries)."""
-        cols = self.columns
-        missing = [c for c in cols if c not in df.columns]
+        """Write df as parquet under data/snap-<id>/ in the current schema:
+        every field, under its current name, CAST to its recorded type, so
+        a file's physical schema is exactly the schema its entry's
+        ``schema_id`` records and reads can plan from the metadata alone
+        (see _read_entry).  A column that cannot be cast to the table type
+        fails here, at write, as Iceberg rejects such writes.  Returns one
+        manifest entry carrying the FILE LIST with per-file row counts
+        (Iceberg manifests are file-granular for the same reason:
+        file-level pruning needs file-level entries)."""
+        fields = self.current_schema
+        missing = [f.name for f in fields if f.name not in df.columns]
         if missing:
             raise ValueError(f"write is missing columns {missing}")
-        out = df.select(*cols)
+        casts = {f.name: f"CAST({_q(f.name)} AS {f.type})" for f in fields}
+        exprs = [f"{casts[n]} AS {_q(n)}" for n in casts]
         # unique suffix per write attempt: concurrent/failed writers can
         # never collide on a path; losers become orphans for
         # remove_orphan_files (Iceberg writes UUID filenames for the same
@@ -455,7 +481,8 @@ class VersionedTable:
                     "partition source column was dropped; evolve the spec "
                     "(set_partition_spec) before writing"
                 )
-            out = out.withColumn(_PARTITION_COL, F.date_format(F.col(src), "yyyy-MM-dd"))
+            exprs.append(f"date_format({casts[src]}, 'yyyy-MM-dd') AS {_PARTITION_COL}")
+        out = df.selectExpr(*exprs)
         if sort_order:
             # write-time sort: tight row-group min/max for predicate skipping
             out = out.sortWithinPartitions(*sort_order)
@@ -1116,20 +1143,26 @@ class VersionedTable:
             cur = [id_to_field[i] for i in ids]
             parts = []
             for d in ds:
-                k = self.spark.read.parquet(os.path.join(self.location, d["path"]))
-                # written under the names at delete time; re-map by id
+                # written under the names and types at delete time (the
+                # entry's schema_id); re-map by id
+                written = {f.id: f for f in self._schema_by_id(d["schema_id"])}
+                k = self.spark.read.schema(_ddl([written[i] for i in ids])).parquet(
+                    os.path.join(self.location, d["path"])
+                )
                 parts.append(
-                    k.select(
+                    k.selectExpr(
                         *[
-                            F.col(w).cast(f.type).alias(f"_eqk_{f.name}")
-                            for w, f in zip(d["eq_cols"], cur)
+                            f"CAST({_q(written[f.id].name)} AS {f.type})"
+                            f" AS {_q('_eqk_' + f.name)}"
+                            for f in cur
                         ]
                     )
                 )
+            # no distinct(): each file's keys are distinct already, and an
+            # anti-join ignores duplicates (a distinct cost a shuffle job)
             keys = parts[0]
             for p in parts[1:]:
                 keys = keys.unionByName(p)
-            keys = keys.distinct()
             cond = None
             for f in cur:
                 # null-safe: an equality delete with a NULL key deletes
@@ -1174,7 +1207,9 @@ class VersionedTable:
             # relative to data (it holds deleted row ids only), so at scale
             # AQE broadcasts it
             paths = [os.path.join(self.location, d["path"]) for d in pos_dels]
-            dels = self._normalize_delete_keys(self.spark.read.parquet(*paths))
+            dels = self._normalize_delete_keys(
+                self.spark.read.schema(_POS_DELETE_DDL).parquet(*paths)
+            )
             out = out.join(dels, ["_del_file", "_del_pos"], "left_anti")
         if need_pos and not with_pos:
             out = out.drop("_del_file", "_del_pos")
@@ -1182,39 +1217,44 @@ class VersionedTable:
 
     def _read_entry(self, entry: dict, with_pos: bool = False) -> DataFrame:
         """Scan one manifest entry mapped to the CURRENT schema by field id.
-        ``with_pos`` appends the physical row identity (_del_file, _del_pos)
-        from the parquet reader's hidden _metadata column — the position-
-        delete key (Iceberg's file_path/pos), stable because row_index is
-        defined by the file itself, not the scan."""
+        The scan is planned from the metadata alone: _write_data_files
+        wrote the entry's files in the schema its ``schema_id`` records,
+        so that schema is the reader schema and planning never opens a
+        footer (no schema-inference job).  The field-id projection is one
+        ``selectExpr``.  ``with_pos`` appends the physical row identity
+        (_del_file, _del_pos) from the parquet reader's hidden _metadata
+        column — the position-delete key (Iceberg's file_path/pos), stable
+        because row_index is defined by the file itself, not the scan."""
+        written_fields = self._schema_by_id(entry["schema_id"])
+        reader = self.spark.read.schema(_ddl(written_fields))
         if entry.get("files") is not None:
             # file-granular entry: scan exactly the live files (a CoW
             # rewrite may keep only a SUBSET of a directory's files)
-            df = self.spark.read.parquet(
+            df = reader.parquet(
                 *[os.path.join(self.location, f["path"]) for f in entry["files"]]
             )
         else:
-            df = self.spark.read.parquet(os.path.join(self.location, entry["path"]))
-        written = {f.id: f for f in self._schema_by_id(entry["schema_id"])}
-        cols = []
-        for f in self.current_schema:
-            if f.id in written and written[f.id].name in df.columns:
-                cols.append(F.col(written[f.id].name).cast(f.type).alias(f.name))
-            else:
-                # column added after these files were written (or re-added
-                # under a new field id): null-fill, exactly like Iceberg
-                cols.append(F.lit(None).cast(f.type).alias(f.name))
+            df = reader.parquet(os.path.join(self.location, entry["path"]))
+        written = {f.id: f.name for f in written_fields}
+        # a field added after these files were written (or re-added under
+        # a new field id) is null-filled, exactly like Iceberg
+        cols = [
+            f"CAST({_q(written[f.id]) if f.id in written else 'NULL'} AS {f.type})"
+            f" AS {_q(f.name)}"
+            for f in self.current_schema
+        ]
         if with_pos:
             # location-RELATIVE file key: the absolute _metadata.file_path
             # URI would bake the table's physical location into delete
             # files, silently resurrecting MoR-deleted rows after a table
             # move (every other manifest path is relative for this reason)
-            stripped = F.regexp_replace(
-                F.col("_metadata.file_path"), r"^[A-Za-z0-9+.\-]+:/+", "/"
-            )
-            rel = F.substring(stripped, len(self.location) + 2, 1 << 30)
-            cols.append(rel.alias("_del_file"))
-            cols.append(F.col("_metadata.row_index").alias("_del_pos"))
-        return df.select(*cols)
+            cols += [
+                "substring(regexp_replace(_metadata.file_path, "
+                f"'^[A-Za-z0-9+.-]+:/+', '/'), {len(self.location) + 2}, {1 << 30})"
+                " AS _del_file",
+                "_metadata.row_index AS _del_pos",
+            ]
+        return df.selectExpr(*cols)
 
     def _select_snapshot(
         self, snapshot_id: int | None = None, as_of_ms: int | None = None
@@ -1356,7 +1396,9 @@ class VersionedTable:
         if pos_dels:
             # (file, position) keys are global: one anti-join over the union
             paths = [os.path.join(self.location, d["path"]) for d in pos_dels]
-            dels = self._normalize_delete_keys(self.spark.read.parquet(*paths))
+            dels = self._normalize_delete_keys(
+                self.spark.read.schema(_POS_DELETE_DDL).parquet(*paths)
+            )
             df = df.join(dels, ["_del_file", "_del_pos"], "left_anti")
         return df.drop("_del_file", "_del_pos")
 
@@ -1485,6 +1527,8 @@ class VersionedTable:
             "rows": n_rows,
             "eq_cols": cols,  # names at delete time (files use these)
             "eq_field_ids": [by_name[c].id for c in cols],  # rename-proof
+            # the schema the key files were written in: their reader schema
+            "schema_id": self._meta["current_schema_id"],
             "seq": None,  # stamped at commit time
         }
         ranges = None
@@ -1939,37 +1983,53 @@ class VersionedTable:
     # metadata tables (ref: SURVEY.md §2A T3-T6)
     # ------------------------------------------------------------------
 
-    def snapshots(self) -> DataFrame:
-        rows = [
-            (
-                s["snapshot_id"],
-                s["parent_id"],
-                s["timestamp_ms"],
-                s["operation"],
-                s["summary"]["total-records"],
-                {k: str(v) for k, v in s["summary"].items()},
-            )
+    # Each metadata table has one row builder (plain dicts in column order,
+    # built from the metadata JSON alone) and one DataFrame wrapper; the
+    # HTTP edge serializes the rows directly, without a Spark round trip.
+
+    def _metadata_frame(self, rows: list[dict], schema: str) -> DataFrame:
+        return self.spark.createDataFrame([tuple(r.values()) for r in rows], schema)
+
+    def snapshot_rows(self) -> list[dict]:
+        return [
+            {
+                "snapshot_id": s["snapshot_id"],
+                "parent_id": s["parent_id"],
+                "timestamp_ms": s["timestamp_ms"],
+                "operation": s["operation"],
+                "total_records": s["summary"]["total-records"],
+                "summary": {k: str(v) for k, v in s["summary"].items()},
+            }
             for s in self._meta["snapshots"]
         ]
-        return self.spark.createDataFrame(
-            rows, "snapshot_id BIGINT, parent_id BIGINT, timestamp_ms BIGINT, "
-            "operation STRING, total_records BIGINT, summary MAP<STRING,STRING>"
+
+    def snapshots(self) -> DataFrame:
+        return self._metadata_frame(
+            self.snapshot_rows(),
+            "snapshot_id BIGINT, parent_id BIGINT, timestamp_ms BIGINT, "
+            "operation STRING, total_records BIGINT, summary MAP<STRING,STRING>",
         )
 
-    def history(self) -> DataFrame:
-        cur = self._meta["current_snapshot_id"]
+    def history_rows(self) -> list[dict]:
         ancestors = set()
         by_id = {s["snapshot_id"]: s for s in self._meta["snapshots"]}
-        sid = cur
+        sid = self._meta["current_snapshot_id"]
         while sid is not None and sid in by_id:
             ancestors.add(sid)
             sid = by_id[sid]["parent_id"]  # chain may end at an EXPIRED parent
-        rows = [
-            (s["timestamp_ms"], s["snapshot_id"], s["parent_id"], s["snapshot_id"] in ancestors)
+        return [
+            {
+                "made_current_at": s["timestamp_ms"],
+                "snapshot_id": s["snapshot_id"],
+                "parent_id": s["parent_id"],
+                "is_current_ancestor": s["snapshot_id"] in ancestors,
+            }
             for s in self._meta["snapshots"]
         ]
-        return self.spark.createDataFrame(
-            rows,
+
+    def history(self) -> DataFrame:
+        return self._metadata_frame(
+            self.history_rows(),
             "made_current_at BIGINT, snapshot_id BIGINT, parent_id BIGINT, "
             "is_current_ancestor BOOLEAN",
         )
@@ -1983,12 +2043,16 @@ class VersionedTable:
             rows, "version INT, file STRING, timestamp_ms BIGINT"
         )
 
-    def refs(self) -> DataFrame:
-        rows = [
-            (name, r.get("type", "branch"), r["snapshot_id"])
+    def ref_rows(self) -> list[dict]:
+        return [
+            {"name": name, "type": r.get("type", "branch"), "snapshot_id": r["snapshot_id"]}
             for name, r in self._meta["refs"].items()
         ]
-        return self.spark.createDataFrame(rows, "name STRING, type STRING, snapshot_id BIGINT")
+
+    def refs(self) -> DataFrame:
+        return self._metadata_frame(
+            self.ref_rows(), "name STRING, type STRING, snapshot_id BIGINT"
+        )
 
     def create_ref(self, name: str, ref_type: str = "tag", snapshot_id: int | None = None) -> None:
         """Create a named branch/tag pointing at a snapshot (ref: #cell-44

@@ -37,10 +37,11 @@ class ApiView:
         point of the layer)."""
         return VersionedTable(self.table.spark, self.table.location)
 
-    def resolve(self) -> dict[str, MatchResult]:
-        """Re-resolve every logical column against the CURRENT schema:
-        field-id history first (exact semantics), semantic matcher second."""
-        table = self._current_table()
+    def resolve(self, table: VersionedTable | None = None) -> dict[str, MatchResult]:
+        """Re-resolve every logical column against the CURRENT schema (that
+        of ``table``, a fresh handle when None): field-id history first
+        (exact semantics), semantic matcher second."""
+        table = self._current_table() if table is None else table
         out: dict[str, MatchResult] = {}
         cols = table.columns
         for alias, defined_name in self.logical_columns.items():
@@ -53,12 +54,16 @@ class ApiView:
 
     def dataframe(self) -> DataFrame:
         """Execute the view; raises if any binding is NO_MATCH/AMBIGUOUS
-        (the reference surfaces these as HTTP errors, api.py:410-413)."""
-        resolved = self.resolve()
+        (the reference surfaces these as HTTP errors, api.py:410-413).
+        Resolution and the read share one handle, so one metadata load
+        serves the whole execution: a rename committed meanwhile cannot
+        leave the resolved names pointing at another schema."""
+        table = self._current_table()
+        resolved = self.resolve(table)
         bad = {a: r.status for a, r in resolved.items() if r.status != MATCH}
         if bad:
             raise KeyError(f"unresolvable view columns: {bad}")
-        df = self._current_table().read()
+        df = table.read()
         return df.select(
             *[df[r.column].alias(alias) for alias, r in resolved.items()]
         )
@@ -66,13 +71,14 @@ class ApiView:
     def binding_report(self) -> dict:
         """Derived mapping artifact (replaces schema_api_mapping.json):
         current schema version + how every logical column resolved."""
+        table = self._current_table()
         return {
             "view": self.name,
-            "schema_id": self._current_table()._meta["current_schema_id"],
+            "schema_id": table._meta["current_schema_id"],
             "bindings": {
                 alias: {"defined_as": self.logical_columns[alias], "status": r.status,
                         "resolved_to": r.column, "score": round(r.score, 4)}
-                for alias, r in self.resolve().items()
+                for alias, r in self.resolve(table).items()
             },
         }
 
