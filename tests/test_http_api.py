@@ -219,3 +219,22 @@ def test_scan_json_forms_of_every_type(spark, tmp_path):
         server.shutdown()
     rows.sort(key=lambda r: r["i"])
     assert json.dumps(rows) == _FORMS_JSON
+
+
+def test_records_of_a_null_struct_with_non_nullable_fields(spark):
+    """``named_struct`` of literals declares its fields non-nullable; a NULL
+    row of it (and one inside an array and a map) is served as null, not a
+    500 from Arrow."""
+    from thesis_iceberg_spark.http_api import _records
+
+    df = spark.sql(
+        "SELECT * FROM VALUES "
+        "(1, named_struct('a', 1, 'b', 'x'), array(named_struct('a', 1)), map('k', named_struct('a', 2))), "
+        "(2, NULL, array(NULL), NULL) AS t(id, s, arr, m)"
+    )
+    assert not df.schema["s"].dataType["a"].nullable
+    rows = sorted(_records(df, 10), key=lambda r: r["id"])
+    assert rows == [
+        {"id": 1, "s": {"a": 1, "b": "x"}, "arr": [{"a": 1}], "m": {"k": {"a": 2}}},
+        {"id": 2, "s": None, "arr": [None], "m": None},
+    ]

@@ -3,7 +3,8 @@ connected_components consumer, forced once in its own job group, must stay
 within a ceiling of Spark jobs read from ``statusTracker()``.  Job counts
 follow from the plan and the driver's actions, not from the host's speed,
 so a regression fails here instead of hiding in wall-clock noise.  The
-table layer's reads and writes are pinned the same way at the end.
+table layer's reads and writes are pinned the same way at the end.  A
+failed ceiling lists each counted job's name and stage count.
 
 The ceilings are the counts measured with CC's driver-local finish (the
 same at sf0.001, sf0.01 and sf0.1); the star-contraction rounds they
@@ -19,7 +20,8 @@ from pyspark.sql import functions as F
 from thesis_iceberg_spark.http_api import Api
 from thesis_iceberg_spark.queries import REGISTRY, queries
 from thesis_iceberg_spark.queries.dedup import connected_components
-from thesis_iceberg_spark.sources.registry import load_table
+from thesis_iceberg_spark.sources.registry import load_table, register_tables
+from thesis_iceberg_spark.tablefmt import VersionedTable
 from thesis_iceberg_spark.tablefmt.catalog import Catalog
 
 queries()
@@ -31,29 +33,60 @@ JOB_CEILINGS = {
 }
 
 
-def _jobs(spark, group, fn) -> int:
-    """Spark jobs ``fn()`` runs, counted in its own job group."""
+def _job_ids(spark, group, fn) -> list[int]:
+    """Ids of the Spark jobs ``fn()`` runs, in its own job group."""
     sc = spark.sparkContext
     sc.setJobGroup(group, group)
     try:
         fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    return sorted(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def _jobs_to_force(spark, group, build) -> int:
-    return _jobs(
+def _jobs(spark, group, fn) -> int:
+    """Spark jobs ``fn()`` runs, counted in its own job group."""
+    return len(_job_ids(spark, group, fn))
+
+
+def _describe_jobs(spark, ids) -> str:
+    """One line per job: its name in ``statusStore()``, its stage count and
+    how many of those stages were skipped (their output was reused)."""
+    store = spark.sparkContext._jsc.sc().statusStore()
+    lines = []
+    for j in ids:
+        job = store.job(j)
+        lines.append(
+            f"  job {j}: {job.name()} [{job.status()}], {job.stageIds().size()} stages"
+            f" ({job.numSkippedStages()} skipped)"
+        )
+    return "\n".join(lines)
+
+
+def _force_job_ids(spark, group, build) -> list[int]:
+    return _job_ids(
         spark, group, lambda: build().write.format("noop").mode("overwrite").save()
     )
 
 
+@pytest.fixture(scope="module")
+def warm_layouts(spark, sf_dir):
+    """Fill the source-layout cache before any count.  A table whose cache
+    marker is missing is re-laid out on its first load (a schema read and
+    a two-job count), which a count would charge to whichever query loads
+    it first.  Another checkout with a different layout rule, run on the
+    same test data, deletes this checkout's markers."""
+    register_tables(spark, sf_dir)
+
+
 @pytest.mark.parametrize("name", sorted(JOB_CEILINGS))
-def test_cc_consumer_job_ceiling(spark, sf_dir, name):
-    jobs = _jobs_to_force(
+def test_cc_consumer_job_ceiling(spark, sf_dir, warm_layouts, name):
+    ids = _force_job_ids(
         spark, f"job_budget_{name}", lambda: REGISTRY[name].fn(spark, sf_dir)
     )
-    assert jobs <= JOB_CEILINGS[name], f"{name}: {jobs} Spark jobs"
+    assert len(ids) <= JOB_CEILINGS[name], (
+        f"{name}: {len(ids)} Spark jobs\n{_describe_jobs(spark, ids)}"
+    )
 
 
 def test_local_cc_leaves_no_persisted_rdd(spark):
@@ -65,8 +98,8 @@ def test_local_cc_leaves_no_persisted_rdd(spark):
 
     pairs = spark.createDataFrame([(1, 2), (2, 3), (7, 8)], "a BIGINT, b BIGINT")
     before = persisted()
-    jobs = _jobs_to_force(
-        spark, "job_budget_local_cc", lambda: connected_components(pairs)
+    jobs = len(
+        _force_job_ids(spark, "job_budget_local_cc", lambda: connected_components(pairs))
     )
     assert persisted() - before == set()
     assert jobs <= 4, f"local connected_components ran {jobs} Spark jobs"
@@ -155,3 +188,25 @@ def test_table_layer_job_ceilings(spark, orders_table):
     ceilings = {**READ_CEILINGS, **WRITE_CEILINGS}
     over = {k: (got[k], c) for k, c in ceilings.items() if any(map(int.__gt__, got[k], c))}
     assert not over, f"(jobs per shape, ceilings): {over}"
+
+
+@pytest.mark.parametrize("layout", ["one_entry_of_40_files", "five_entries_of_8_files"])
+def test_read_of_many_files_runs_no_job(spark, tmp_path, layout):
+    """read() passes every data file the manifest lists as its own path;
+    building it must not list them in a Spark job (Spark does above
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` paths)."""
+
+    def part(i: int, n: int):
+        return spark.range(1000 * i, 1000 * (i + 1)).repartition(n)
+
+    if layout == "one_entry_of_40_files":
+        vt = VersionedTable.create(spark, str(tmp_path / "t"), df=part(0, 40))
+    else:
+        vt = VersionedTable.create(spark, str(tmp_path / "t"), df=part(0, 8))
+        for i in range(1, 5):
+            vt.append(part(i, 8))
+    assert sum(len(e["files"]) for e in vt._current_manifest()) == 40
+    ids = _job_ids(
+        spark, f"job_budget_read_{layout}", lambda: VersionedTable(spark, vt.location).read()
+    )
+    assert not ids, f"read() ran {len(ids)} Spark jobs\n{_describe_jobs(spark, ids)}"

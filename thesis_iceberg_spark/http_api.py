@@ -43,6 +43,12 @@ run one bounded Arrow collect, and each value is served as:
     binary                  the bytes decoded as UTF-8
     array, map, struct      JSON list / object of the forms above
 
+A limited read has no ORDER BY: it serves the first ``limit`` matching rows
+the scan yields.  A table scan reads all the files of one written schema as
+one relation, whose splits Spark orders by size, not by manifest entry; so
+when more rows match than ``limit``, which of them are served follows the
+table's file layout and may change after any write or compaction.
+
 Scale note: querying stays fully distributed — the handler only collects
 the final limited projection. The dev server (ThreadingHTTPServer) matches
 the reference's Flask dev-server scope; production delivery would sit the
@@ -61,6 +67,7 @@ from urllib.parse import parse_qs, unquote, urlparse
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql import types as T
 
 from thesis_iceberg_spark.functions.resolve import AMBIGUOUS, MATCH, NO_MATCH, match_column
 from thesis_iceberg_spark.tablefmt.catalog import Catalog
@@ -110,10 +117,34 @@ def _json_converter(t: pa.DataType, tz):
     return None
 
 
+def _nullable(t: T.DataType) -> T.DataType:
+    """``t`` with every nested struct field, array element and map value
+    nullable."""
+    if isinstance(t, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in t]
+        )
+    if isinstance(t, T.ArrayType):
+        return T.ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, T.MapType):
+        return T.MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
+
+
 def _records(df: DataFrame, limit: int) -> list[dict]:
     """The reference's JSON edge (api.py:67): one bounded Arrow collect of
     the final projection, converted value by value to the JSON forms the
-    module docstring lists (exact doubles, ints as ints)."""
+    module docstring lists (exact doubles, ints as ints).
+
+    Nested fields are made nullable first: Arrow rejects a NULL struct
+    whose fields are declared non-nullable (``named_struct`` of literals
+    next to a NULL row), because the struct's null slots are nulls in its
+    children too."""
+    relaxed = T.StructType(
+        [T.StructField(f.name, _nullable(f.dataType), f.nullable, f.metadata) for f in df.schema]
+    )
+    if relaxed != df.schema:
+        df = df.to(relaxed)
     table = df.limit(limit).toArrow()
     # Arrow carries TIMESTAMP values as UTC instants; they are served as
     # the session time zone's wall-clock time, as pandas served them

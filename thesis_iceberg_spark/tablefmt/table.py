@@ -38,6 +38,7 @@ on metadata/commit.lock around the version check-and-flip (see _commit).
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import random
@@ -196,6 +197,13 @@ def _ddl(fields: list[_Field]) -> str:
 
 # the fixed schema of every position-delete file (_write_delete_files)
 _POS_DELETE_DDL = "_del_file STRING, _del_pos BIGINT"
+
+
+def _parquet_files(root: str) -> list[str]:
+    """The parquet files under directory ``root``, in path order."""
+    return sorted(
+        os.path.join(d, n) for d, _, names in os.walk(root) for n in names if n.endswith(".parquet")
+    )
 
 
 def _schema_fields(df_schema: T.StructType, start_id: int = 1) -> list[_Field]:
@@ -433,29 +441,24 @@ class VersionedTable:
         predicates can skip whole files from the manifest alone."""
         import pyarrow.parquet as pq
 
-        root = os.path.join(self.location, rel)
         out: list[dict] = []
-        for dirpath, _dirs, names in os.walk(root):
-            for name in sorted(names):
-                if not name.endswith(".parquet"):
-                    continue
-                full = os.path.join(dirpath, name)
-                pf = pq.ParquetFile(full)
-                entry = {
-                    "path": os.path.relpath(full, self.location),
-                    "rows": pf.metadata.num_rows,
-                }
-                if with_stats:
-                    entry["stats"] = self._file_stats(pf)
-                out.append(entry)
-        return sorted(out, key=lambda f: f["path"])
+        for full in _parquet_files(os.path.join(self.location, rel)):
+            pf = pq.ParquetFile(full)
+            entry = {
+                "path": os.path.relpath(full, self.location),
+                "rows": pf.metadata.num_rows,
+            }
+            if with_stats:
+                entry["stats"] = self._file_stats(pf)
+            out.append(entry)
+        return out
 
     def _write_data_files(self, df: DataFrame, snapshot_id: int) -> list[dict]:
         """Write df as parquet under data/snap-<id>/ in the current schema:
         every field, under its current name, CAST to its recorded type, so
         a file's physical schema is exactly the schema its entry's
         ``schema_id`` records and reads can plan from the metadata alone
-        (see _read_entry).  A column that cannot be cast to the table type
+        (see _read_entries).  A column that cannot be cast to the table type
         fails here, at write, as Iceberg rejects such writes.  Returns one
         manifest entry carrying the FILE LIST with per-file row counts
         (Iceberg manifests are file-granular for the same reason:
@@ -699,7 +702,7 @@ class VersionedTable:
     def _stats_name_map(self, entry: dict) -> dict[str, str]:
         """Current column name -> the name the entry's files recorded their
         footer stats under (FIELD-ID resolution across renames — the same
-        remap _read_entry applies to data).  Stats are keyed by the names
+        remap _read_entries applies to data).  Stats are keyed by the names
         at WRITE time, so after rename('id','old_id'); rename('v','id')
         an old file's 'id' stats describe a DIFFERENT field than today's
         'id' — looking them up by current name would prune files that DO
@@ -1173,10 +1176,17 @@ class VersionedTable:
         return df
 
     def _scan_snapshot(self, snap: dict, with_pos: bool) -> DataFrame:
-        """Union all manifest entries of ``snap`` and anti-join away
-        position-deleted and equality-deleted rows. ``with_pos=True`` keeps
-        the (_del_file, _del_pos) row-identity columns for DML that writes
-        delete files."""
+        """The live rows of ``snap``: its manifest entries read as one
+        parquet relation per written schema (_read_entries), with
+        equality-deleted and position-deleted rows anti-joined away.
+        ``with_pos=True`` keeps the (_del_file, _del_pos) row-identity
+        columns for DML that writes delete files.
+
+        Every read path plans here: read(), scan(), time travel, the HTTP
+        routes, ApiView, MoR delete/update/merge, CoW rewrites and
+        compact().  Equality deletes apply per SEQUENCE-SCOPED GROUP of
+        entries (each group's delete keys are built once); position
+        deletes apply once over the union, keyed per file."""
         entries = [e for e in snap["manifest"] if e["rows"] > 0]
         pos_dels, eq_dels = self._split_deletes(snap.get("delete_manifest", []))
         need_pos = with_pos or bool(pos_dels)
@@ -1186,21 +1196,13 @@ class VersionedTable:
                 empty = empty.withColumn("_del_file", F.lit(None).cast("string"))
                 empty = empty.withColumn("_del_pos", F.lit(None).cast("bigint"))
             return empty
-        # each manifest entry is its own directory root (possibly with
-        # partition subdirs), so read per-entry and union — mixing roots in
-        # one read() call trips CONFLICTING_DIRECTORY_STRUCTURES.
-        # Equality deletes apply per SEQUENCE-SCOPED GROUP of entries (the
-        # delete-key subtrees are built once per group, not per entry);
-        # position deletes apply once over the union.
-        parts = []
-        for es, applicable in self._eq_delete_groups(entries, eq_dels):
-            grp = self._read_entry(es[0], with_pos=need_pos)
-            for e in es[1:]:
-                grp = grp.unionByName(self._read_entry(e, with_pos=need_pos))
-            parts.append(self._apply_eq_deletes(grp, applicable))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
+        out = functools.reduce(
+            DataFrame.unionByName,
+            [
+                self._apply_eq_deletes(self._read_entries(es, need_pos), applicable)
+                for es, applicable in self._eq_delete_groups(entries, eq_dels)
+            ],
+        )
         if pos_dels:
             # merge-on-read: subtract (file, position) pairs recorded by
             # delete snapshots — one anti-join; the delete set is tiny
@@ -1215,46 +1217,63 @@ class VersionedTable:
             out = out.drop("_del_file", "_del_pos")
         return out
 
-    def _read_entry(self, entry: dict, with_pos: bool = False) -> DataFrame:
-        """Scan one manifest entry mapped to the CURRENT schema by field id.
-        The scan is planned from the metadata alone: _write_data_files
-        wrote the entry's files in the schema its ``schema_id`` records,
-        so that schema is the reader schema and planning never opens a
-        footer (no schema-inference job).  The field-id projection is one
-        ``selectExpr``.  ``with_pos`` appends the physical row identity
-        (_del_file, _del_pos) from the parquet reader's hidden _metadata
-        column — the position-delete key (Iceberg's file_path/pos), stable
-        because row_index is defined by the file itself, not the scan."""
-        written_fields = self._schema_by_id(entry["schema_id"])
-        reader = self.spark.read.schema(_ddl(written_fields))
+    def _entry_files(self, entry: dict) -> list[str]:
+        """Absolute paths of a manifest entry's data files: its recorded
+        file list (a CoW rewrite may keep only a SUBSET of a directory's
+        files), or, for a legacy directory entry without one, the parquet
+        files under its directory, listed on the driver."""
         if entry.get("files") is not None:
-            # file-granular entry: scan exactly the live files (a CoW
-            # rewrite may keep only a SUBSET of a directory's files)
-            df = reader.parquet(
-                *[os.path.join(self.location, f["path"]) for f in entry["files"]]
-            )
-        else:
-            df = reader.parquet(os.path.join(self.location, entry["path"]))
-        written = {f.id: f.name for f in written_fields}
-        # a field added after these files were written (or re-added under
-        # a new field id) is null-filled, exactly like Iceberg
-        cols = [
-            f"CAST({_q(written[f.id]) if f.id in written else 'NULL'} AS {f.type})"
-            f" AS {_q(f.name)}"
-            for f in self.current_schema
-        ]
-        if with_pos:
-            # location-RELATIVE file key: the absolute _metadata.file_path
-            # URI would bake the table's physical location into delete
-            # files, silently resurrecting MoR-deleted rows after a table
-            # move (every other manifest path is relative for this reason)
-            cols += [
-                "substring(regexp_replace(_metadata.file_path, "
-                f"'^[A-Za-z0-9+.-]+:/+', '/'), {len(self.location) + 2}, {1 << 30})"
-                " AS _del_file",
-                "_metadata.row_index AS _del_pos",
+            return [os.path.join(self.location, f["path"]) for f in entry["files"]]
+        return _parquet_files(os.path.join(self.location, entry["path"]))
+
+    def _read_entries(self, entries: list[dict], with_pos: bool) -> DataFrame:
+        """Scan manifest entries mapped to the CURRENT schema by field id,
+        as ONE parquet relation per written ``schema_id``: all the files of
+        the entries sharing a schema go to one ``parquet(*paths)`` read
+        with one field-id ``selectExpr``, and only distinct written schemas
+        are unioned.  Each extra relation costs its own file index,
+        codegen stage and (position deletes are pushed below the union)
+        broadcast join, a fixed cost that dominates a small table's read.
+        Grouping does not change what a row means: reading file paths
+        (never directories) infers no partition columns, and the
+        position-delete key is per file.
+
+        The scan is planned from the metadata alone: _write_data_files
+        wrote an entry's files in the schema its ``schema_id`` records, so
+        that schema is the reader schema and planning never opens a footer
+        (no schema-inference job).  ``with_pos`` appends the physical row
+        identity (_del_file, _del_pos) from the parquet reader's hidden
+        _metadata column — the position-delete key (Iceberg's
+        file_path/pos), stable because row_index is defined by the file
+        itself, not the scan."""
+        by_schema: dict[int, list[str]] = {}
+        for e in entries:
+            by_schema.setdefault(e["schema_id"], []).extend(self._entry_files(e))
+        parts = []
+        for schema_id, paths in by_schema.items():
+            written_fields = self._schema_by_id(schema_id)
+            written = {f.id: f.name for f in written_fields}
+            # a field added after these files were written (or re-added
+            # under a new field id) is null-filled, exactly like Iceberg
+            cols = [
+                f"CAST({_q(written[f.id]) if f.id in written else 'NULL'} AS {f.type})"
+                f" AS {_q(f.name)}"
+                for f in self.current_schema
             ]
-        return df.selectExpr(*cols)
+            if with_pos:
+                # location-RELATIVE file key: the absolute _metadata.file_path
+                # URI would bake the table's physical location into delete
+                # files, silently resurrecting MoR-deleted rows after a table
+                # move (every other manifest path is relative for this reason)
+                cols += [
+                    "substring(regexp_replace(_metadata.file_path, "
+                    f"'^[A-Za-z0-9+.-]+:/+', '/'), {len(self.location) + 2}, {1 << 30})"
+                    " AS _del_file",
+                    "_metadata.row_index AS _del_pos",
+                ]
+            reader = self.spark.read.schema(_ddl(written_fields))
+            parts.append(reader.parquet(*paths).selectExpr(*cols))
+        return functools.reduce(DataFrame.unionByName, parts)
 
     def _select_snapshot(
         self, snapshot_id: int | None = None, as_of_ms: int | None = None
@@ -1333,7 +1352,7 @@ class VersionedTable:
         driver-side output is a manifest-scale file list, never row data.
         At 100k files this is 1 job, not one per manifest entry."""
         return {
-            r["_del_file"]  # already location-relative (see _read_entry)
+            r["_del_file"]  # already location-relative (see _read_entries)
             for r in matched_rows.select("_del_file").distinct().collect()
         }
 
@@ -1377,30 +1396,14 @@ class VersionedTable:
         return kept_entries, touched_subsets
 
     def _live_union(self, snap: dict, entries: list[dict]) -> DataFrame:
-        """Union the LIVE rows (position AND equality deletes applied — a
-        CoW rewrite over MoR state must not resurrect MoR-deleted rows; a
-        rewritten file gets a NEW sequence number, which would silently
-        detach outstanding equality deletes from resurrected rows) of the
-        given file-granular manifest entries, row-identity columns
-        dropped."""
-        pos_dels, eq_dels = self._split_deletes(snap.get("delete_manifest", []))
-        parts = []
-        for es, applicable in self._eq_delete_groups(entries, eq_dels):
-            grp = self._read_entry(es[0], with_pos=True)
-            for e in es[1:]:
-                grp = grp.unionByName(self._read_entry(e, with_pos=True))
-            parts.append(self._apply_eq_deletes(grp, applicable))
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
-        if pos_dels:
-            # (file, position) keys are global: one anti-join over the union
-            paths = [os.path.join(self.location, d["path"]) for d in pos_dels]
-            dels = self._normalize_delete_keys(
-                self.spark.read.schema(_POS_DELETE_DDL).parquet(*paths)
-            )
-            df = df.join(dels, ["_del_file", "_del_pos"], "left_anti")
-        return df.drop("_del_file", "_del_pos")
+        """The LIVE rows of the given file-granular manifest entries, read
+        through _scan_snapshot (one relation per written schema) with
+        ``snap``'s position AND equality deletes applied — a CoW rewrite
+        over MoR state must not resurrect MoR-deleted rows; a rewritten
+        file gets a NEW sequence number, which would silently detach
+        outstanding equality deletes from resurrected rows.  Row-identity
+        columns are dropped."""
+        return self._scan_snapshot({**snap, "manifest": entries}, with_pos=False)
 
     def _normalize_delete_keys(self, dels: DataFrame) -> DataFrame:
         """Current delete files store location-RELATIVE _del_file keys; files
