@@ -114,7 +114,8 @@ def main() -> None:
         t_sketch = timeit(lambda: countmin_sketch_df(docs).collect())
         t_topk = timeit(lambda: countmin_topk_df(docs).collect())
         t_budget = timeit(lambda: token_budget_select_df(docs).count())
-        sel = token_budget_select_df(docs)
+        depths: list = []
+        sel = token_budget_select_df(docs, refine_depth_out=depths)
         n_kept = sel.count()
         # the sorted fraction, measured CORRECTLY (review r10: the kept
         # docs of the lowest selected bucket are NOT the boundary bin's
@@ -163,7 +164,7 @@ def main() -> None:
             f"cm_topk={t_topk:.3f}s ({t_topk / base['tk']:.1f}x) "
             f"budget_sel={t_budget:.3f}s ({t_budget / base['bu']:.1f}x) "
             f"kept={n_kept} boundary_bin={bbin} "
-            f"refine_depth={token_budget_select_df.last_refine_depth} "
+            f"refine_depth={depths[-1]} "
             f"canary={canary():.3f}s",
             flush=True,
         )

@@ -166,33 +166,9 @@ def test_artifact_store_gc_prunes_only_old_siblings(spark, sf_dir):
     dead_build = os.path.join(root, "sfW_0ddba1100000.build-4194000-ee")
     os.makedirs(dead_build, exist_ok=True)
     os.utime(dead_build, (old_age, old_age))
-    # the LEGACY shared root (/tmp/tisw_checks): the once-per-process
-    # debris sweep there must only touch entries PROVABLY ours — the
-    # emb_int8_vt child is the ONLY accepted proof (pass 5 #2: even a
-    # build/stale-shaped NAME can be a tablefmt corpus basename), so a
-    # tablefmt-style bare dir AND a build-shaped dir without our table
-    # both survive however old, while our real old-layout debris goes
-    legacy = similarity._LEGACY_ROOT
-    os.makedirs(legacy, exist_ok=True)
-    foreign = os.path.join(legacy, "sfQ_foreign_tablefmt")
-    os.makedirs(foreign, exist_ok=True)
-    os.utime(foreign, (old_age, old_age))
-    foreign_buildish = os.path.join(
-        legacy, "corpus.build-4194004-aa"  # a CORPUS dir, not our debris
-    )
-    os.makedirs(foreign_buildish, exist_ok=True)
-    os.utime(foreign_buildish, (old_age, old_age))
-    legacy_build = os.path.join(legacy, "sfV_ab12cd34ef56.build-4194003-ff")
-    os.makedirs(os.path.join(legacy_build, "emb_int8_vt"), exist_ok=True)
-    os.utime(legacy_build, (old_age, old_age))
-    legacy_tag = os.path.join(legacy, "sfV_ab12cd34ef56")
-    os.makedirs(os.path.join(legacy_tag, "emb_int8_vt"), exist_ok=True)
-    os.utime(legacy_tag, (old_age, old_age))
 
-    # bypass the per-process memo so the GC-on-entry path actually
-    # runs, and re-arm the once-per-process legacy sweep
+    # bypass the per-process memo so the GC-on-entry path actually runs
     similarity._QUANT_BUILT.pop(os.path.abspath(sf_dir), None)
-    similarity._LEGACY_SWEPT = False
     try:
         vt = similarity._quantized_table(spark, sf_dir)
         for d in victims:
@@ -201,11 +177,6 @@ def test_artifact_store_gc_prunes_only_old_siblings(spark, sf_dir):
         assert os.path.exists(young)
         assert os.path.exists(memoized)
         assert os.path.exists(live_build)
-        # legacy root: only provably-ours debris swept
-        assert os.path.exists(foreign)
-        assert os.path.exists(foreign_buildish)
-        assert not os.path.exists(legacy_build)
-        assert not os.path.exists(legacy_tag)
         # the current artifact itself still reads fine after the sweep,
         # and entry refreshed its mtime (the cross-process keep-alive).
         # ASSERT the location shape rather than branching on it (pass 4
@@ -220,8 +191,7 @@ def test_artifact_store_gc_prunes_only_old_siblings(spark, sf_dir):
         assert _t.time() - os.stat(tag_dir).st_mtime < 3600
     finally:
         similarity._QUANT_BUILT.pop("/fake/corpusZ", None)
-        for d in (young, live_build, memoized, foreign, foreign_buildish,
-                  legacy_build, legacy_tag):
+        for d in (young, live_build, memoized):
             import shutil as _sh
 
             _sh.rmtree(d, ignore_errors=True)

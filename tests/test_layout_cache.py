@@ -1,17 +1,21 @@
 """Layout-cache GC (ADVICE r4): content+rule-keyed cache dirs must not
 strand their predecessors under /tmp forever — a regeneration or rule
-bump re-keys the dir, and the old key is unreachable garbage."""
+bump re-keys the dir, and the old key is unreachable garbage.  Another
+rule's entries may be a second checkout's live layout, so they are
+collected only once they are a day old."""
 
 from __future__ import annotations
 
 import os
+import time
+
+_TWO_DAYS_AGO = time.time() - 2 * 86400
 
 
 def test_stale_layout_keys_are_garbage_collected(spark, tmp_path, monkeypatch):
     from thesis_iceberg_spark.sources import registry as reg
 
     monkeypatch.setattr(reg, "_CACHE_BASE", str(tmp_path / "cache"))
-    monkeypatch.setenv("SPARK_GRAFT_LAYOUT_CACHE", "1")
     sf = str(tmp_path / "sfx")
     os.makedirs(sf)
     spark.range(10).toDF("doc_id").coalesce(1).write.parquet(
@@ -28,6 +32,9 @@ def test_stale_layout_keys_are_garbage_collected(spark, tmp_path, monkeypatch):
     stale_marker.write_text("{}")
     stale_tmp = tag_dir / "documents-999-111-222-r0.tmp-deadbeef"
     stale_tmp.mkdir()
+    # another rule's entries go only once aged past the cutoff
+    for p in (stale_dir, stale_marker, stale_tmp):
+        os.utime(p, (_TWO_DAYS_AGO, _TWO_DAYS_AGO))
     # a concurrent writer's tmp for the CURRENT key must survive
     cur_key = reg._layout_key(f"{sf}/documents.parquet")
     live_tmp = tag_dir / f"documents-{cur_key}.tmp-cafe0123"
@@ -57,7 +64,6 @@ def test_same_basename_roots_get_distinct_cache_namespaces(
     from thesis_iceberg_spark.sources import registry as reg
 
     monkeypatch.setattr(reg, "_CACHE_BASE", str(tmp_path / "cache"))
-    monkeypatch.setenv("SPARK_GRAFT_LAYOUT_CACHE", "1")
     roots = []
     for root in ("rootA", "rootB"):
         sf = str(tmp_path / root / "sf0.5")
@@ -79,3 +85,36 @@ def test_same_basename_roots_get_distinct_cache_namespaces(
     # B's relayout + GC must not touch A's namespace
     reg._cached_path(spark, b, "documents")
     assert marker_a.exists()
+
+
+def test_other_rule_layouts_are_collected_only_when_aged(
+    spark, tmp_path, monkeypatch
+):
+    """A checkout running the next layout rule on the same data keeps its
+    fresh markers; this rule's stale-stat siblings go at once."""
+    from thesis_iceberg_spark.sources import registry as reg
+
+    monkeypatch.setattr(reg, "_CACHE_BASE", str(tmp_path / "cache"))
+    sf = str(tmp_path / "sfx")
+    os.makedirs(sf)
+    spark.range(10).toDF("doc_id").coalesce(1).write.parquet(
+        f"{sf}/documents.parquet"
+    )
+    tag_dir = tmp_path / "cache" / reg._cache_tag(sf)
+    tag_dir.mkdir(parents=True)
+    cur_key = reg._layout_key(f"{sf}/documents.parquet")
+    next_rule = f"r{reg._LAYOUT_RULE + 1}"
+    fresh_other = tag_dir / f"documents-{cur_key.rpartition('-r')[0]}-{next_rule}.marker"
+    fresh_other.write_text("{}")
+    aged_other = tag_dir / f"documents-999-111-222-{next_rule}.marker"
+    aged_other.write_text("{}")
+    os.utime(aged_other, (_TWO_DAYS_AGO, _TWO_DAYS_AGO))
+    same_rule_stale = tag_dir / f"documents-999-111-222-r{reg._LAYOUT_RULE}.marker"
+    same_rule_stale.write_text("{}")
+
+    reg._cached_path(spark, sf, "documents")
+
+    assert fresh_other.exists()
+    assert not aged_other.exists()
+    assert not same_rule_stale.exists()
+    assert (tag_dir / f"documents-{cur_key}.marker").exists()

@@ -179,42 +179,10 @@ def test_trailing_slash_location_normalized(spark, tmp_path):
     assert vt.read().count() == 13
 
 
-def test_legacy_absolute_delete_keys_still_apply(spark, loc):
-    """Delete files written by the earlier format stored absolute file://
-    URIs; the reader normalizes them so unmoved tables keep their deletes."""
-    vt = VersionedTable.create(
-        spark, loc, df=_df(spark, 0, 30),
-        properties={"write.delete.mode": "merge-on-read"},
-    )
-    vt.delete(F.col("id") < 10)
-    # rewrite the delete file's keys to the OLD absolute-URI format
-    import glob as g
-
-    del_dir = g.glob(os.path.join(loc, "data", "delete-snap-*"))[0]
-    dels = spark.read.parquet(del_dir)
-    legacy = dels.select(
-        F.concat(F.lit("file://" + loc + "/"), F.col("_del_file")).alias("_del_file"),
-        "_del_pos",
-    )
-    rows = legacy.collect()
-    import shutil
-
-    shutil.rmtree(del_dir)
-    spark.createDataFrame(rows, legacy.schema).coalesce(1).write.parquet(del_dir)
-    assert VersionedTable(spark, loc).read().count() == 20
-
-
 def _manifest_paths(vt):
     """Every data-file path referenced by the CURRENT snapshot."""
     snap = vt._select_snapshot()
-    out = set()
-    for entry in snap["manifest"]:
-        files = entry.get("files")
-        if files is None:
-            out.add(entry["path"])
-        else:
-            out.update(f["path"] for f in files)
-    return out
+    return {f["path"] for entry in snap["manifest"] for f in entry["files"]}
 
 
 def test_cow_merge_rewrites_only_matched_files(spark, loc):

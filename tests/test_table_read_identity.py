@@ -263,33 +263,3 @@ def test_table_service_shape_reads_as_one_data_scan(spark, sf_dir, tmp_path):
     assert got.filter("o_orderstatus = 'U'").count() == src.filter(
         "o_orderkey >= 100 AND o_orderkey < 130"
     ).count()
-
-
-def test_legacy_directory_entries_read_in_the_same_relation(spark, tmp_path):
-    """Entries without a file list (an older metadata format) are listed on
-    the driver and read in the same relation as file-list entries."""
-    import json
-    import os
-
-    df = spark.sql(
-        "SELECT id, CAST(date_add(DATE'2024-01-01', CAST(id % 3 AS INT)) AS TIMESTAMP) AS ts "
-        "FROM range(12)"
-    )
-    vt = VersionedTable.create(
-        spark, str(tmp_path / "t"), df=df, partition_day="ts", properties=_MOR
-    )
-    vt.append(df.withColumn("id", F.col("id") + 100))
-    path = os.path.join(vt.location, "metadata", f"v{vt._meta['version']}.metadata.json")
-    with open(path) as f:
-        meta = json.load(f)
-    for snap in meta["snapshots"]:
-        snap["manifest"][0].pop("files")  # the created entry becomes a directory entry
-    with open(path, "w") as f:
-        json.dump(meta, f)
-    vt = VersionedTable(spark, vt.location)
-    vt.delete("id % 4 = 1")
-    want = [(base + i, dt.datetime(2024, 1, 1 + i % 3)) for base in (0, 100) for i in range(12) if i % 4 != 1]
-    got = vt.read()
-    assert _rows(got) == sorted(want)
-    assert got.columns == ["id", "ts"]
-    assert _data_scans(got) == 1

@@ -246,3 +246,59 @@ def test_changelog_update_images_with_key(spark, loc):
         for r in vt.changelog(from_snapshot=1, to_snapshot=2).collect()
     )
     assert ch3 == [(2, "DELETE"), (2, "INSERT")]
+
+
+def test_every_write_records_the_metadata_shape_reads_rely_on(spark, loc):
+    """Reads take ``seq``, ``schema_id``, ``spec_id`` and the file list from
+    every data entry, ``source_id`` from every partition spec, and
+    location-relative ``_del_file`` keys from position deletes, with no
+    fallback for metadata that lacks them.  Drive a partitioned table
+    through every write path and check the metadata on disk after each."""
+    import os
+    import re
+
+    df = spark.sql(
+        "SELECT id, id % 7 AS v, "
+        "CAST(date_add(DATE'2024-01-01', CAST(id % 3 AS INT)) AS TIMESTAMP) AS ts "
+        "FROM range(30)"
+    )
+    vt = VersionedTable.create(spark, loc, df=df.repartition(2), partition_day="ts")
+    src = spark.createDataFrame(
+        [(7, 70, None), (200, 2, None)], "id BIGINT, v BIGINT, ts TIMESTAMP"
+    )
+    writes = [
+        ("append", lambda: vt.append(df.withColumn("id", F.col("id") + 100))),
+        ("cow delete", lambda: vt.delete("id = 3")),
+        ("mor delete", lambda: vt.delete("id = 4", mode="merge-on-read")),
+        ("update", lambda: vt.update({"v": "v + 1"}, "id = 5", mode="merge-on-read")),
+        ("merge", lambda: vt.merge(src, on="id", when_matched_update={"v": "s.v"})),
+        ("delete_by_key", lambda: vt.delete_by_key(src.select("id").limit(1))),
+        ("rename", lambda: vt.rename_column("ts", "event_ts")),
+        ("set_partition_spec", lambda: vt.set_partition_spec(None)),
+        ("compact", lambda: vt.compact()),
+    ]
+    pos_deletes: set[str] = set()
+    for name, write in writes:
+        write()
+        meta = VersionedTable(spark, loc)._meta
+        schema_ids = {s["schema_id"] for s in meta["schemas"]}
+        spec_ids = {s["spec_id"] for s in meta["partition_specs"]}
+        for spec in meta["partition_specs"]:
+            for field in spec["spec"]:
+                assert isinstance(field["source_id"], int), (name, spec)
+        for snap in meta["snapshots"]:
+            for e in snap["manifest"]:
+                assert isinstance(e["seq"], int), (name, e)
+                assert e["schema_id"] in schema_ids, (name, e)
+                assert e["spec_id"] in spec_ids, (name, e)
+                assert isinstance(e["files"], list), (name, e)
+            for d in snap["delete_manifest"]:
+                assert isinstance(d["seq"], int), (name, d)
+                if "eq_field_ids" in d or d["path"] in pos_deletes:
+                    continue
+                pos_deletes.add(d["path"])
+                keys = spark.read.parquet(os.path.join(loc, d["path"]))
+                for (k,) in keys.select("_del_file").distinct().collect():
+                    assert not re.match(r"^([A-Za-z0-9+.-]+:)?/", k), (name, k)
+                    assert os.path.isfile(os.path.join(loc, k)), (name, k)
+    assert len(pos_deletes) == 2  # the MoR delete's and the update's

@@ -132,12 +132,15 @@ def test_refinement_score_bins_match_reference(spark, mixed_dir):
 
     docs = spark.read.parquet(f"{mixed_dir}/documents.parquet")
     expect, _ = _reference_prefix(spark, mixed_dir)
-    out = token_budget_select_df(docs, boundary_sort_cap=2).collect()
+    depth: list = []
+    out = token_budget_select_df(
+        docs, boundary_sort_cap=2, refine_depth_out=depth
+    ).collect()
     assert {r.doc_id for r in out} == expect
     # the crossing bin holds 4 equal-score docs > cap, so at least one
     # refinement level ran (score bins first, then the equal-score run
     # falls to id bins)
-    assert token_budget_select_df.last_refine_depth >= 1
+    assert depth[-1] >= 1
 
 
 def test_refinement_id_bins_on_equal_score_run(spark, tmp_path_factory):
@@ -150,25 +153,28 @@ def test_refinement_id_bins_on_equal_score_run(spark, tmp_path_factory):
     docs = spark.read.parquet(f"{d}/documents.parquet")
     expect, budget = _reference_prefix(spark, d)
     assert expect == set(range(1, 33))  # deterministic: id-ASC prefix
-    out = token_budget_select_df(docs, boundary_sort_cap=4).collect()
+    depth: list = []
+    out = token_budget_select_df(
+        docs, boundary_sort_cap=4, refine_depth_out=depth
+    ).collect()
     assert {r.doc_id for r in out} == expect
     assert sum(r.n_tokens for r in out) == budget
-    assert token_budget_select_df.last_refine_depth >= 1
+    assert depth[-1] >= 1
 
 
 def test_default_cap_never_refines_at_test_scale(spark, mixed_dir):
     from thesis_iceberg_spark.queries.pipeline_q import token_budget_select_df
 
     docs = spark.read.parquet(f"{mixed_dir}/documents.parquet")
-    token_budget_select_df(docs).count()
-    assert token_budget_select_df.last_refine_depth == 0
+    depth: list = []
+    token_budget_select_df(docs, refine_depth_out=depth).count()
+    assert depth[-1] == 0
 
 
 def test_refine_depth_out_param(spark, mixed_dir):
     # concurrency-safe diagnostics channel (review r10 ADVICE): the call
-    # appends its depth exactly once to the caller-owned list, matching
-    # the legacy function attribute on every path (refined / unrefined /
-    # degenerate empty budget)
+    # appends its depth exactly once to the caller-owned list on every
+    # path (refined / unrefined / degenerate empty budget)
     from thesis_iceberg_spark.queries.pipeline_q import token_budget_select_df
 
     docs = spark.read.parquet(f"{mixed_dir}/documents.parquet")
@@ -177,7 +183,6 @@ def test_refine_depth_out_param(spark, mixed_dir):
     assert out == [0]
     token_budget_select_df(docs, boundary_sort_cap=2, refine_depth_out=out).count()
     assert len(out) == 2 and out[1] >= 1
-    assert out[1] == token_budget_select_df.last_refine_depth
     empty = docs.filter("doc_id IS NULL")
     token_budget_select_df(empty, refine_depth_out=out).count()
     assert out[2:] == [0]
@@ -195,10 +200,13 @@ def test_multilevel_refinement_offset_accounting(spark, tmp_path_factory):
     docs = spark.read.parquet(f"{d}/documents.parquet")
     expect, budget = _reference_prefix(spark, d)
     assert expect == set(range(1, 257))  # id-ASC prefix of half the mass
-    out = token_budget_select_df(docs, boundary_sort_cap=4).collect()
+    depth: list = []
+    out = token_budget_select_df(
+        docs, boundary_sort_cap=4, refine_depth_out=depth
+    ).collect()
     assert {r.doc_id for r in out} == expect
     assert sum(r.n_tokens for r in out) == budget
-    assert token_budget_select_df.last_refine_depth >= 2
+    assert depth[-1] >= 2
 
 
 def test_budget_frac_extremes(spark, mixed_dir):

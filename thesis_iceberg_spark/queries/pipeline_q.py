@@ -716,12 +716,7 @@ def token_budget_select_df(
     whatever remains (correct, just slower).
 
     Diagnostics: pass ``refine_depth_out=[]`` and the call appends the
-    refinement depth it used (call-local, safe under concurrency).
-    ``token_budget_select_df.last_refine_depth`` also records the most
-    recent call's depth, but it is a PROCESS-GLOBAL function attribute —
-    concurrent calls (multiple driver threads / in-process parallel
-    tests) clobber each other, so treat it as single-threaded
-    diagnostics only (review r10 ADVICE)."""
+    refinement depth it used (call-local, safe under concurrency)."""
     from pyspark.sql.window import Window
 
     from thesis_iceberg_spark.queries.binning import range_bin
@@ -756,11 +751,8 @@ def token_budget_select_df(
     empty = scored.filter(F.lit(False)).select(*out_cols)
 
     def _note_depth(d: int) -> None:
-        # call-local out-param first (concurrency-safe), then the legacy
-        # process-global attribute (single-threaded diagnostics only)
         if refine_depth_out is not None:
             refine_depth_out.append(d)
-        token_budget_select_df.last_refine_depth = d
 
     def hist_stats(df, bucket_col):
         """Per-bin stats as a COLLECTED list of <= NB_QBUCKETS rows,

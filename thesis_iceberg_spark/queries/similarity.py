@@ -791,11 +791,6 @@ _QUANT_BUILT: dict[str, str] = {}  # sf_dir -> table location in THIS process
 # literally named 'quant' collides) makes a sweep inside that tree safe.
 # A sibling root only this module writes removes the collision class.
 _QUANT_ROOT = "/tmp/tisw_quant"
-_LEGACY_ROOT = "/tmp/tisw_checks"  # pre-r15 store location; the first
-# _quantized_table entry per process sweeps this module's own provable
-# debris there and under the short-lived pass-3 'quant' subdir (pass 4
-# #2, pass 5 #1/#3 — once per process, flagged below)
-_LEGACY_SWEPT = False
 
 
 def _touch_artifact(d: str) -> bool:
@@ -914,12 +909,7 @@ def _quantized_table(spark: SparkSession, sf_dir: str):
     #     still alive (/proc check — a race-losing live process may be
     #     scanning its kept private build; pid reuse only over-keeps).
     # Runs once per (process, sf_dir) thanks to the _QUANT_BUILT memo.
-    def _gc_store(
-        root: str,
-        keep: str,
-        max_age_sec: int = 86400,
-        mine_only: bool = False,
-    ) -> None:
+    def _gc_store(root: str, keep: str, max_age_sec: int = 86400) -> None:
         import re
         import time
 
@@ -942,14 +932,6 @@ def _quantized_table(spark: SparkSession, sf_dir: str):
                 continue
             p = os.path.join(root, name)
             m = pid_of.search(name)
-            if mine_only:
-                # legacy-root sweep: the root is SHARED and tablefmt
-                # corpus basenames can be ANYTHING (even build/stale-
-                # shaped — pass 5 #2), so the ONLY acceptable proof of
-                # ownership is our table name as a direct child; both
-                # our tag dirs and our build dirs carry it
-                if not os.path.isdir(os.path.join(p, "emb_int8_vt")):
-                    continue
             if m and os.path.exists(f"/proc/{m.group(1)}"):
                 continue
             try:
@@ -960,16 +942,6 @@ def _quantized_table(spark: SparkSession, sf_dir: str):
             shutil.rmtree(p, ignore_errors=True)
 
     _gc_store(_QUANT_ROOT, tag)
-    global _LEGACY_SWEPT
-    if not _LEGACY_SWEPT:  # once per process (pass 5 #3): the debris is
-        # historical, so later entries need not re-list the shared root
-        _LEGACY_SWEPT = True
-        _gc_store(_LEGACY_ROOT, keep=tag, mine_only=True)
-        # the pass-3 interim layout nested the store at <legacy>/quant
-        # (pass 5 #1); same provable-ownership sweep there
-        _gc_store(
-            os.path.join(_LEGACY_ROOT, "quant"), keep="", mine_only=True
-        )
     if os.path.isdir(shared):
         _touch_artifact(shared)  # keep-alive: reads don't update mtime
 
@@ -1113,20 +1085,17 @@ def _pruned_range_parts(
     num: int = RANGE_NUM,
     den: int = RANGE_DEN,
     n_centroids: int = N_CENTROIDS,
-    materialize_index: bool = False,
 ):
     """Internal pieces of ann_int8_range_search_pruned, exposed so the
     tests can count pruned buckets: (assigned, keep, qrow).
 
-    ``materialize_index`` eagerly checkpoints the centroid assignment —
-    the local stand-in for the WRITE-TIME index build the docstring's
-    100 TB claim assumes (bucket id as partition key; build_range_index
-    is the real write-time form).  Without it the df-level form pays the
-    assignment shuffle per query, which at local scales costs more than
-    the brute scan it saves (measured: tests/exp_pruned_range_scale.py)."""
+    The df-level form pays the centroid-assignment shuffle per query,
+    which at local scales costs more than the brute scan it saves; the
+    write-time index (bucket id as partition key) is build_range_index.
+    The measurement, which also timed an eagerly checkpointed assignment,
+    is in PERFORMANCE.md; its script, tests/exp_pruned_range_scale.py,
+    is in git history (commit a62cc58)."""
     q8, cent, assigned = _range_index_frames(spark, sf_dir, n_centroids)
-    if materialize_index:
-        assigned = assigned.localCheckpoint(eager=True)
     stats = assigned.groupBy("bucket").agg(F.max("dist2").alias("r2"))
     qrow = q8.orderBy("vec_id").limit(1).select(
         F.col("vec_id").alias("qid"),
@@ -1154,7 +1123,6 @@ def ann_int8_range_search_pruned(
     num: int = RANGE_NUM,
     den: int = RANGE_DEN,
     n_centroids: int = N_CENTROIDS,
-    materialize_index: bool = False,
 ) -> DataFrame:
     """EXACTLY-pruned bucketed range search — the scale path a brute
     range scan lacks: vectors are bucketed by nearest centroid (a
@@ -1177,9 +1145,7 @@ def ann_int8_range_search_pruned(
     crafts one and asserts buckets actually drop).  At 100 TB the bucket
     id is the partition key, so a pruned bucket is a pruned partition —
     the scan reads only surviving buckets' int8 columns."""
-    assigned, keep, qrow = _pruned_range_parts(
-        spark, sf_dir, num, den, n_centroids, materialize_index
-    )
+    assigned, keep, qrow = _pruned_range_parts(spark, sf_dir, num, den, n_centroids)
 
     qdot = _int8_dot(F.col("v8"), F.col("qq"))
     return (

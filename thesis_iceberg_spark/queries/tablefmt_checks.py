@@ -454,11 +454,7 @@ def tablefmt_merge_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _paths(v: VersionedTable) -> set[str]:
         snap = v._select_snapshot()
-        out: set[str] = set()
-        for e in snap["manifest"]:
-            for f in e.get("files") or [{"path": e["path"]}]:
-                out.add(f["path"])
-        return out
+        return {f["path"] for e in snap["manifest"] for f in e["files"]}
 
     base_paths = _paths(vt)
     updates = orders.filter(F.col("o_orderkey") % 100 == 0).select(

@@ -44,7 +44,9 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # is exactly what Iceberg table maintenance / bin-packing does at 100 TB),
 # so tables above a size threshold are re-laid-out ONCE per sf_dir into
 # multiple files under /tmp, values byte-identical, and scans read the
-# multi-file copy.  Disable with SPARK_GRAFT_LAYOUT_CACHE=0.
+# multi-file copy.  Each layout is keyed by its source stat and layout
+# rule; checkouts running different rules on the same data keep their
+# own layouts side by side (see _gc_stale_layouts).
 
 _CACHE_BASE = "/tmp/tisw_layout_cache"
 _ROWS_PER_FILE = 20_000
@@ -52,6 +54,9 @@ _MIN_BYTES_TO_RELAYOUT = 256 << 10  # fat-row tables: split by bytes
 _BYTES_PER_FILE = 64 << 10
 _LAYOUT_RULE = 2  # bump to invalidate markers written under an older rule
 _MIN_ROWS_TO_RELAYOUT = 50_000
+# age past which another rule's layout is collected (the int8 store's
+# cutoff in queries/similarity.py)
+_OTHER_RULE_MAX_AGE_S = 86400
 
 
 def _src_bytes(src: str) -> int:
@@ -111,23 +116,37 @@ def _relayout(spark: SparkSession, src: str, dst: str, marker_path: str) -> None
 def _gc_stale_layouts(parent: str, name: str, keep: set[str]) -> None:
     """Content+rule-keyed cache dirs strand their predecessors whenever
     the testdata regenerates or the layout rule bumps (ADVICE r4:
-    unbounded /tmp growth): a sibling ``{name}-*`` entry with a different
-    key is unreachable — keys derive solely from the CURRENT source stat
-    and rule — so delete it.  A ``.tmp-`` dir for the CURRENT key is a
-    concurrent writer of the same content and is left alone; old-key tmp
-    dirs are dead writers' debris."""
+    unbounded /tmp growth).  A sibling ``{name}-*`` entry of THIS rule
+    with a different key is unreachable — keys derive solely from the
+    CURRENT source stat and rule — so it is deleted at once.  A
+    ``.tmp-`` dir for the CURRENT key is a concurrent writer of the same
+    content and is left alone; this rule's old-key tmp dirs are dead
+    writers' debris.  An entry of ANOTHER rule may be the live layout of
+    a checkout running that rule on the same data: deleting it at once
+    made two such checkouts re-lay each other's tables out on every
+    alternation, so it goes only once older than _OTHER_RULE_MAX_AGE_S."""
     import shutil
+    import time
 
     current = next(iter(keep)).split(".marker")[0] if keep else ""
     try:
         entries = list(os.scandir(parent))
     except FileNotFoundError:
         return
+    now = time.time()
     for e in entries:
         if not e.name.startswith(f"{name}-") or e.name in keep:
             continue
         if ".tmp-" in e.name and e.name.startswith(current):
             continue
+        # key "<size>-<mtime>-<bytes>-r<rule>", then ".marker"/".tmp-<hex>"
+        if e.name.split(".", 1)[0].rpartition("-r")[2] != str(_LAYOUT_RULE):
+            try:
+                age = now - e.stat(follow_symlinks=False).st_mtime
+            except OSError:
+                continue
+            if age < _OTHER_RULE_MAX_AGE_S:
+                continue
         if e.is_dir(follow_symlinks=False):
             shutil.rmtree(e.path, ignore_errors=True)
         else:
@@ -150,17 +169,6 @@ def _cache_tag(sf_dir: str) -> str:
 
 def _cached_path(spark: SparkSession, sf_dir: str, name: str) -> str:
     src = f"{sf_dir}/{name}.parquet"
-    if os.environ.get("SPARK_GRAFT_LAYOUT_CACHE", "1") != "1":
-        return src
-    # one-time sweep of pre-namespacing cache dirs (bare basename, no
-    # path-hash suffix): only pre-r5 code wrote them and nothing reads
-    # them any more — without this they'd strand on disk forever, the
-    # exact leak the keyed GC exists to prevent
-    legacy = os.path.join(_CACHE_BASE, os.path.basename(os.path.normpath(sf_dir)))
-    if os.path.isdir(legacy):
-        import shutil
-
-        shutil.rmtree(legacy, ignore_errors=True)
     dst = os.path.join(_CACHE_BASE, _cache_tag(sf_dir), f"{name}-{_layout_key(src)}")
     marker_path = dst + ".marker"
     stat = os.stat(src)

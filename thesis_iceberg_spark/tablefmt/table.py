@@ -199,13 +199,6 @@ def _ddl(fields: list[_Field]) -> str:
 _POS_DELETE_DDL = "_del_file STRING, _del_pos BIGINT"
 
 
-def _parquet_files(root: str) -> list[str]:
-    """The parquet files under directory ``root``, in path order."""
-    return sorted(
-        os.path.join(d, n) for d, _, names in os.walk(root) for n in names if n.endswith(".parquet")
-    )
-
-
 def _schema_fields(df_schema: T.StructType, start_id: int = 1) -> list[_Field]:
     return [
         _Field(id=start_id + i, name=f.name, type=f.dataType.simpleString())
@@ -442,7 +435,13 @@ class VersionedTable:
         import pyarrow.parquet as pq
 
         out: list[dict] = []
-        for full in _parquet_files(os.path.join(self.location, rel)):
+        root = os.path.join(self.location, rel)
+        for full in sorted(
+            os.path.join(d, n)
+            for d, _, names in os.walk(root)
+            for n in names
+            if n.endswith(".parquet")
+        ):
             pf = pq.ParquetFile(full)
             entry = {
                 "path": os.path.relpath(full, self.location),
@@ -498,7 +497,7 @@ class VersionedTable:
             {
                 "path": rel,
                 "schema_id": self._meta["current_schema_id"],
-                "spec_id": self._meta.get("current_spec_id", 0),
+                "spec_id": self._meta["current_spec_id"],
                 "rows": sum(f["rows"] for f in files),
                 "files": files,
                 # seq placeholder: stamped with the COMMITTING snapshot's id
@@ -509,13 +508,8 @@ class VersionedTable:
 
     def _spec_source_name(self, spec: list[dict]) -> str | None:
         """CURRENT name of a partition spec's source column, resolved by
-        field id (rename-proof).  None when the field was dropped, or —
-        for specs predating source_id stamping — falls back to the
-        recorded name (valid as long as that column was never renamed)."""
-        sid = spec[0].get("source_id")
-        if sid is None:
-            name = spec[0]["source_name"]
-            return name if name in self.columns else None
+        field id (rename-proof).  None when the field was dropped."""
+        sid = spec[0]["source_id"]
         for f in self.current_schema:
             if f.id == sid:
                 return f.name
@@ -525,14 +519,11 @@ class VersionedTable:
         """The partition spec an entry's files were WRITTEN under (per-entry
         spec_id, like schema_id): spec evolution must not make old files'
         _p_day= directories mean the wrong column at plan time."""
-        specs = self._meta.get("partition_specs")
-        if not specs:
-            return self._meta["partition_spec"]
-        sid = entry.get("spec_id", 0)
-        for s in specs:
-            if s["spec_id"] == sid:
-                return s["spec"]
-        return self._meta["partition_spec"]
+        return next(
+            s["spec"]
+            for s in self._meta["partition_specs"]
+            if s["spec_id"] == entry["spec_id"]
+        )
 
     def set_partition_spec(
         self, partition_day: str | None, now_ms: int | None = None
@@ -546,13 +537,11 @@ class VersionedTable:
         new_spec = _day_spec(self.current_schema, partition_day)
         cur = self._meta["partition_spec"]
         if [
-            (s.get("source_id"), s.get("transform")) for s in new_spec
-        ] == [(s.get("source_id"), s.get("transform")) for s in cur]:
+            (s["source_id"], s["transform"]) for s in new_spec
+        ] == [(s["source_id"], s["transform"]) for s in cur]:
             return
         meta = json.loads(json.dumps(self._meta))
-        specs = meta.setdefault(
-            "partition_specs", [{"spec_id": 0, "spec": meta["partition_spec"]}]
-        )
+        specs = meta["partition_specs"]
         new_id = max(s["spec_id"] for s in specs) + 1
         specs.append({"spec_id": new_id, "spec": new_spec})
         meta["current_spec_id"] = new_id
@@ -570,7 +559,7 @@ class VersionedTable:
         return (
             max(
                 max((s["snapshot_id"] for s in self._meta["snapshots"]), default=0),
-                self._meta.get("last_snapshot_id", 0),
+                self._meta["last_snapshot_id"],
             )
             + 1
         )
@@ -592,17 +581,9 @@ class VersionedTable:
         # STRICTLY SMALLER seq, so a slow append that wrote its files
         # before a concurrent equality delete but commits after it (rebase)
         # is correctly NOT affected — write-time ids in file paths cannot
-        # give that ordering.  An entry with NO seq key at all is a LEGACY
-        # persisted entry (pre-stamping metadata): recover its write-time
-        # order from the path id rather than stamping it with THIS commit's
-        # id, which would misorder it after every existing delete file and
-        # inflate this snapshot's added-* summary counts.
+        # give that ordering.
         def stamp(e: dict) -> dict:
-            if e.get("seq") is not None:
-                return e
-            if "seq" in e:  # placeholder: new in this commit
-                return {**e, "seq": sid}
-            return {**e, "seq": self._entry_seq(e)}  # legacy: path fallback
+            return e if e["seq"] is not None else {**e, "seq": sid}
 
         manifest = [stamp(e) for e in manifest]
         delete_manifest = [stamp(e) for e in (delete_manifest or [])]
@@ -685,18 +666,14 @@ class VersionedTable:
 
     def _entry_could_match(self, entry: dict, ranges: dict | None) -> bool:
         """Conservative: could any row of this manifest entry satisfy a
-        predicate bounded by ``ranges``?  Unknown predicate shape, a
-        directory-level entry (no per-file stats), or bounds that overlap
-        all answer yes."""
+        predicate bounded by ``ranges``?  Unknown predicate shape or bounds
+        that overlap answer yes."""
         if ranges is None:
-            return True
-        files = entry.get("files")
-        if files is None:
             return True
         name_map = self._stats_name_map(entry)
         spec = self._entry_partition_spec(entry)
         return any(
-            self._file_in_ranges(f, ranges, name_map, spec) for f in files
+            self._file_in_ranges(f, ranges, name_map, spec) for f in entry["files"]
         )
 
     def _stats_name_map(self, entry: dict) -> dict[str, str]:
@@ -709,16 +686,10 @@ class VersionedTable:
         match (committed-DML corruption, not just a bad plan).  A current
         field with no counterpart in the write-time schema maps to a
         sentinel that can never hit a stats key (added column: no stats,
-        cannot prune).  Entries predating schema_id stamping get the
-        all-sentinel map unless the schema never changed."""
-        sid = entry.get("schema_id")
-        cur_sid = self._meta["current_schema_id"]
-        if sid == cur_sid:
+        cannot prune)."""
+        sid = entry["schema_id"]
+        if sid == self._meta["current_schema_id"]:
             return {}
-        if sid is None:
-            if len(self._meta["schemas"]) == 1:
-                return {}
-            return {f.name: "\x00missing" for f in self.current_schema}
         old_by_id = {f.id: f.name for f in self._schema_by_id(sid)}
         return {
             f.name: old_by_id.get(f.id, "\x00missing")
@@ -776,8 +747,8 @@ class VersionedTable:
         (``predicate_ranges``; None = shape unknown = any file could
         match).  The bounds check mirrors Iceberg's
         validateAddedDataFiles conflict detection: conservative in the
-        conflict direction — a file with no stats, a directory-level
-        entry, or an unparseable predicate all count as possible matches.
+        conflict direction — a file with no stats or an unparseable
+        predicate counts as a possible match.
 
         Retry budget: _commit only conflicts when another writer ADVANCED
         the table, so every retry implies system-wide progress and the
@@ -1045,14 +1016,13 @@ class VersionedTable:
         for entry in snap["manifest"]:
             if entry["rows"] == 0:
                 continue
-            files = entry.get("files")
-            if not ranges or files is None:
+            if not ranges:
                 out.append(entry)
                 continue
             name_map = self._stats_name_map(entry)
             spec = self._entry_partition_spec(entry)
             sel = [
-                f for f in files if self._file_in_ranges(f, ranges, name_map, spec)
+                f for f in entry["files"] if self._file_in_ranges(f, ranges, name_map, spec)
             ]
             if sel:
                 out.append(
@@ -1087,19 +1057,6 @@ class VersionedTable:
         eq = [d for d in deletes if "eq_field_ids" in d]
         return pos, eq
 
-    @staticmethod
-    def _entry_seq(entry: dict) -> int:
-        """Data sequence number of a manifest entry: the commit-time stamp,
-        falling back to the write-time id in the path for entries committed
-        before stamping existed (close enough: those all predate any
-        equality delete)."""
-        import re as _re
-
-        if "seq" in entry:
-            return entry["seq"]
-        m = _re.search(r"snap-(\d+)-", entry["path"])
-        return int(m.group(1)) if m else 0
-
     def _eq_delete_groups(
         self, entries: list[dict], eq_dels: list[dict]
     ) -> list[tuple[list[dict], list[dict]]]:
@@ -1112,8 +1069,7 @@ class VersionedTable:
         groups vs E entries — an E-fold smaller plan)."""
         groups: dict[tuple, list[dict]] = {}
         for e in entries:
-            seq = self._entry_seq(e)
-            key = tuple(d["path"] for d in eq_dels if seq < d["seq"])
+            key = tuple(d["path"] for d in eq_dels if e["seq"] < d["seq"])
             groups.setdefault(key, []).append(e)
         by_path = {d["path"]: d for d in eq_dels}
         return [
@@ -1209,9 +1165,7 @@ class VersionedTable:
             # relative to data (it holds deleted row ids only), so at scale
             # AQE broadcasts it
             paths = [os.path.join(self.location, d["path"]) for d in pos_dels]
-            dels = self._normalize_delete_keys(
-                self.spark.read.schema(_POS_DELETE_DDL).parquet(*paths)
-            )
+            dels = self.spark.read.schema(_POS_DELETE_DDL).parquet(*paths)
             out = out.join(dels, ["_del_file", "_del_pos"], "left_anti")
         if need_pos and not with_pos:
             out = out.drop("_del_file", "_del_pos")
@@ -1220,11 +1174,8 @@ class VersionedTable:
     def _entry_files(self, entry: dict) -> list[str]:
         """Absolute paths of a manifest entry's data files: its recorded
         file list (a CoW rewrite may keep only a SUBSET of a directory's
-        files), or, for a legacy directory entry without one, the parquet
-        files under its directory, listed on the driver."""
-        if entry.get("files") is not None:
-            return [os.path.join(self.location, f["path"]) for f in entry["files"]]
-        return _parquet_files(os.path.join(self.location, entry["path"]))
+        files)."""
+        return [os.path.join(self.location, f["path"]) for f in entry["files"]]
 
     def _read_entries(self, entries: list[dict], with_pos: bool) -> DataFrame:
         """Scan manifest entries mapped to the CURRENT schema by field id,
@@ -1368,14 +1319,7 @@ class VersionedTable:
         for entry in snap["manifest"]:
             if entry["rows"] == 0:
                 continue
-            files = entry.get("files")
-            if files is None:
-                # directory entry: its files all live under entry["path"]/,
-                # so an untouched directory skips the fs listing entirely
-                if not any(p.startswith(entry["path"] + "/") for p in matched_all):
-                    kept_entries.append(entry)
-                    continue
-                files = self._list_written_files(entry["path"])
+            files = entry["files"]
             matched_rel = {f["path"] for f in files} & matched_all
             if not matched_rel:
                 kept_entries.append(entry)
@@ -1404,20 +1348,6 @@ class VersionedTable:
         outstanding equality deletes from resurrected rows.  Row-identity
         columns are dropped."""
         return self._scan_snapshot({**snap, "manifest": entries}, with_pos=False)
-
-    def _normalize_delete_keys(self, dels: DataFrame) -> DataFrame:
-        """Current delete files store location-RELATIVE _del_file keys; files
-        written by an earlier format stored absolute file:// URIs. Normalize
-        absolute keys to relative at read time so pre-existing (unmoved)
-        tables keep their deletes applied after the format change."""
-        stripped = F.regexp_replace(
-            F.col("_del_file"), r"^[A-Za-z0-9+.\-]+:/+", "/"
-        )
-        rel = F.when(
-            stripped.startswith("/"),
-            F.substring(stripped, len(self.location) + 2, 1 << 30),
-        ).otherwise(F.col("_del_file"))
-        return dels.withColumn("_del_file", rel)
 
     def _write_delete_files(self, matches: DataFrame, snapshot_id: int) -> list[dict]:
         """Write (_del_file, _del_pos) pairs as a position-delete parquet
