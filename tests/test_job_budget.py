@@ -6,11 +6,13 @@ so a regression fails here instead of hiding in wall-clock noise.  The
 table layer's reads and writes are pinned the same way at the end.  A
 failed ceiling lists each counted job's name and stage count.
 
-The ceilings are the counts measured with CC's driver-local finish (the
-same at sf0.001, sf0.01 and sf0.1); the star-contraction rounds they
-replaced cost 47 / 32 / 32 jobs.  The local finish itself is four jobs:
-the edge checkpoint's shuffle and result stages, the bounded collect,
-and the caller's own force."""
+The ceilings are the counts measured with CC's driver-local finish and
+source reads planned from the layout cache's recorded schemas (the same
+at sf0.001, sf0.01 and sf0.1, three runs each); the star-contraction
+rounds cost 47 / 32 / 32 jobs, and schema inference on every source load
+one job more each.  The local finish itself is four jobs: the edge
+checkpoint's shuffle and result stages, the bounded collect, and the
+caller's own force."""
 
 from __future__ import annotations
 
@@ -27,9 +29,9 @@ from thesis_iceberg_spark.tablefmt.catalog import Catalog
 queries()
 
 JOB_CEILINGS = {
-    "dedup_semdedup_centroid_far": 20,
-    "dedup_embedding_cluster_canonical": 9,
-    "dedup_cluster_canonical": 8,
+    "dedup_semdedup_centroid_far": 18,
+    "dedup_embedding_cluster_canonical": 8,
+    "dedup_cluster_canonical": 7,
 }
 
 
@@ -72,9 +74,9 @@ def _force_job_ids(spark, group, build) -> list[int]:
 @pytest.fixture(scope="module")
 def warm_layouts(spark, sf_dir):
     """Fill the source-layout cache before any count.  A table whose cache
-    marker is missing is re-laid out on its first load (a schema read and
-    a two-job count), which a count would charge to whichever query loads
-    it first.  Another checkout with a different layout rule, run on the
+    marker is missing is re-laid out on its first load (a schema-inference
+    job and a two-job count), which a count would charge to whichever query
+    loads it first.  Another checkout with a different layout rule, run on the
     same test data, deletes this checkout's markers."""
     register_tables(spark, sf_dir)
 

@@ -2,12 +2,17 @@
 strand their predecessors under /tmp forever — a regeneration or rule
 bump re-keys the dir, and the old key is unreachable garbage.  Another
 rule's entries may be a second checkout's live layout, so they are
-collected only once they are a day old."""
+collected only once they are a day old, and so is a namespace whose
+sources are all gone.  Each marker records the schema its layout is read
+with, so a warm load runs no Spark job."""
 
 from __future__ import annotations
 
+import json
 import os
 import time
+
+import pytest
 
 _TWO_DAYS_AGO = time.time() - 2 * 86400
 
@@ -118,3 +123,105 @@ def test_other_rule_layouts_are_collected_only_when_aged(
     assert not aged_other.exists()
     assert not same_rule_stale.exists()
     assert (tag_dir / f"documents-{cur_key}.marker").exists()
+
+
+def _jobs(spark, group, fn) -> int:
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _write_source(spark, sf: str, name: str, rows: int) -> None:
+    os.makedirs(sf, exist_ok=True)
+    spark.range(rows).toDF("doc_id").coalesce(1).write.parquet(f"{sf}/{name}.parquet")
+
+
+def test_warm_load_table_runs_no_job(spark, tmp_path, monkeypatch):
+    """A warm load reads with the schema its marker recorded: no
+    schema-inference job, for a passthrough source and a multi-file copy."""
+    from thesis_iceberg_spark.sources import registry as reg
+
+    monkeypatch.setattr(reg, "_CACHE_BASE", str(tmp_path / "cache"))
+    sf = str(tmp_path / "sfx")
+    _write_source(spark, sf, "documents", 10)
+    _write_source(spark, sf, "orders", reg._MIN_ROWS_TO_RELAYOUT)
+    for name, passthrough in (("documents", True), ("orders", False)):
+        cold = reg.load_table(spark, sf, name)
+        marker = tmp_path / "cache" / reg._cache_tag(sf) / f"{name}-{reg._layout_key(f'{sf}/{name}.parquet')}.marker"
+        assert json.loads(marker.read_text())["passthrough"] is passthrough
+        jobs = _jobs(spark, f"layout_warm_{name}", lambda: reg.load_table(spark, sf, name))
+        assert jobs == 0, f"warm load_table({name!r}) ran {jobs} Spark jobs"
+        warm = reg.load_table(spark, sf, name)
+        assert warm.schema == cold.schema
+        assert sorted(warm.collect()) == sorted(cold.collect())
+
+
+@pytest.mark.parametrize("rule", [2, "current"])
+def test_marker_without_schema_is_relaid_out(spark, tmp_path, monkeypatch, rule):
+    """A marker in the rule-2 format (no recorded schema) at the current
+    key is stale: the load rebuilds it instead of inferring the schema."""
+    from thesis_iceberg_spark.sources import registry as reg
+
+    monkeypatch.setattr(reg, "_CACHE_BASE", str(tmp_path / "cache"))
+    sf = str(tmp_path / "sfx")
+    _write_source(spark, sf, "documents", 10)
+    src = f"{sf}/documents.parquet"
+    tag_dir = tmp_path / "cache" / reg._cache_tag(sf)
+    tag_dir.mkdir(parents=True)
+    marker = tag_dir / f"documents-{reg._layout_key(src)}.marker"
+    st = os.stat(src)
+    marker.write_text(json.dumps({
+        "src": src, "passthrough": True, "size": st.st_size, "mtime": st.st_mtime,
+        "rule": reg._LAYOUT_RULE if rule == "current" else rule,
+    }))
+
+    assert reg.load_table(spark, sf, "documents").count() == 10
+
+    rebuilt = json.loads(marker.read_text())
+    assert rebuilt["rule"] == reg._LAYOUT_RULE
+    assert rebuilt["schema"]["fields"][0]["name"] == "doc_id"
+
+
+def test_relayout_collects_namespaces_whose_sources_are_gone(spark, tmp_path, monkeypatch):
+    """A namespace whose markers all name a deleted source, or that holds
+    no marker, is collected by the next relayout once aged; one with a
+    live source, or changed recently, stays.  A warm load collects
+    nothing."""
+    from thesis_iceberg_spark.sources import registry as reg
+
+    cache = tmp_path / "cache"
+    monkeypatch.setattr(reg, "_CACHE_BASE", str(cache))
+    live_sf = str(tmp_path / "live")
+    _write_source(spark, live_sf, "documents", 10)
+
+    def namespace(ns: str, srcs: list[str], aged: bool = True):
+        d = cache / ns
+        d.mkdir(parents=True)
+        (d / "documents-1-2-3-r1").mkdir()
+        for i, src in enumerate(srcs):
+            (d / f"t{i}-1-2-3-r1.marker").write_text(json.dumps({"src": src}))
+        if aged:
+            os.utime(d, (_TWO_DAYS_AGO, _TWO_DAYS_AGO))
+        return d
+
+    gone = str(tmp_path / "gone" / "documents.parquet")
+    live = namespace("live-1", [gone, f"{live_sf}/documents.parquet"])
+    dead = namespace("dead-1", [gone, gone])
+    empty = namespace("empty-1", [])
+    recent = namespace("recent-1", [gone], aged=False)
+
+    sf = str(tmp_path / "sfx")
+    _write_source(spark, sf, "documents", 10)
+    reg.load_table(spark, sf, "documents")
+
+    assert live.exists() and recent.exists()
+    assert not dead.exists() and not empty.exists()
+    assert (cache / reg._cache_tag(sf)).exists()
+
+    later = namespace("dead-2", [gone])
+    reg.load_table(spark, sf, "documents")
+    assert later.exists()

@@ -13,16 +13,26 @@ not rows-only smoke.
 from __future__ import annotations
 
 import os
+import re
 import shutil
+import time
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from thesis_iceberg_spark.queries import register
-from thesis_iceberg_spark.sources.registry import load_table
+from thesis_iceberg_spark.sources.registry import _cache_tag, load_table
 from thesis_iceberg_spark.tablefmt import VersionedTable
 
 BASE = "/tmp/tisw_checks"
+# Each process builds its check tables under its own key: with one
+# directory per data root, two processes on the same data (a test run and
+# gate_sim, say) deleted each other's tables mid-query.
+_PROC_KEY = f"{os.getpid()}-{uuid.uuid4().hex[:8]}"
+_PROC_KEY_RE = re.compile(r"(\d+)-[0-9a-f]{8}")
+# age past which a directory of a process that is gone is collected
+_DEAD_MAX_AGE_S = 86400
 DEC = "decimal(18,4)"
 
 # fixed snapshot timestamps (ms) so time travel by timestamp is deterministic
@@ -30,11 +40,44 @@ T1, T2, T3, T4, T5, T6 = (1_000_000 * i for i in range(1, 7))
 
 
 def _loc(sf_dir: str, name: str) -> str:
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(BASE, tag, name)
+    return os.path.join(BASE, _PROC_KEY, _cache_tag(sf_dir), name)
+
+
+def _pid_alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        pass
+    return True
+
+
+def _gc_dead_warehouses() -> None:
+    """Remove other processes' directories once their process is gone and
+    they have not changed for _DEAD_MAX_AGE_S; the age floor spares a
+    process whose pid this one cannot see.  Entries not named by a process
+    key go by age alone."""
+    try:
+        entries = list(os.scandir(BASE))
+    except FileNotFoundError:
+        return
+    now = time.time()
+    for e in entries:
+        m = _PROC_KEY_RE.fullmatch(e.name)
+        if e.name == _PROC_KEY or (m and _pid_alive(int(m.group(1)))):
+            continue
+        try:
+            if now - e.stat(follow_symlinks=False).st_mtime < _DEAD_MAX_AGE_S:
+                continue
+        except OSError:
+            continue
+        shutil.rmtree(e.path, ignore_errors=True)
 
 
 def _fresh(sf_dir: str, name: str) -> str:
+    if not os.path.isdir(os.path.join(BASE, _PROC_KEY)):
+        _gc_dead_warehouses()
     loc = _loc(sf_dir, name)
     shutil.rmtree(loc, ignore_errors=True)
     os.makedirs(os.path.dirname(loc), exist_ok=True)

@@ -21,6 +21,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -46,16 +47,18 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # multiple files under /tmp, values byte-identical, and scans read the
 # multi-file copy.  Each layout is keyed by its source stat and layout
 # rule; checkouts running different rules on the same data keep their
-# own layouts side by side (see _gc_stale_layouts).
+# own layouts side by side (see _gc_stale_layouts).  The marker records
+# the schema the layout was read with, so a warm load plans from it and
+# runs no schema-inference job.
 
 _CACHE_BASE = "/tmp/tisw_layout_cache"
 _ROWS_PER_FILE = 20_000
 _MIN_BYTES_TO_RELAYOUT = 256 << 10  # fat-row tables: split by bytes
 _BYTES_PER_FILE = 64 << 10
-_LAYOUT_RULE = 2  # bump to invalidate markers written under an older rule
+_LAYOUT_RULE = 3  # bump to invalidate markers written under an older rule
 _MIN_ROWS_TO_RELAYOUT = 50_000
-# age past which another rule's layout is collected (the int8 store's
-# cutoff in queries/similarity.py)
+# age past which another rule's layout, or a namespace whose sources are
+# all gone, is collected (the int8 store's cutoff in queries/similarity.py)
 _OTHER_RULE_MAX_AGE_S = 86400
 
 
@@ -108,7 +111,15 @@ def _relayout(spark: SparkSession, src: str, dst: str, marker_path: str) -> None
             shutil.rmtree(tmp, ignore_errors=True)
         marker = {"src": src, "passthrough": False, "files": files, "dst": dst}
     stat = os.stat(src)
-    marker.update({"size": stat.st_size, "mtime": stat.st_mtime, "rule": _LAYOUT_RULE})
+    marker.update(
+        {
+            "size": stat.st_size,
+            "mtime": stat.st_mtime,
+            "rule": _LAYOUT_RULE,
+            # the copy is written from df, so one schema reads both paths
+            "schema": df.schema.jsonValue(),
+        }
+    )
     with open(marker_path, "w") as f:
         json.dump(marker, f)
 
@@ -156,6 +167,40 @@ def _gc_stale_layouts(parent: str, name: str, keep: set[str]) -> None:
                 pass
 
 
+def _gc_dead_namespaces(keep: str) -> None:
+    """Every data root gets its own namespace (_cache_tag), and
+    _gc_stale_layouts only looks inside the one being re-laid out, so a
+    namespace whose data root was deleted (a test's tmp dir) was never
+    collected.  One is dead when every marker's ``src`` is gone or it
+    holds no marker; it goes once its directory has not changed for
+    _OTHER_RULE_MAX_AGE_S, which spares a relayout still in flight."""
+    import shutil
+    import time
+
+    try:
+        namespaces = [e for e in os.scandir(_CACHE_BASE) if e.is_dir(follow_symlinks=False)]
+    except FileNotFoundError:
+        return
+    now = time.time()
+    for ns in namespaces:
+        try:
+            if ns.name == keep or now - ns.stat(follow_symlinks=False).st_mtime < _OTHER_RULE_MAX_AGE_S:
+                continue
+            markers = [e.path for e in os.scandir(ns.path) if e.name.endswith(".marker")]
+        except OSError:
+            continue
+        if not any(_marker_src_exists(m) for m in markers):
+            shutil.rmtree(ns.path, ignore_errors=True)
+
+
+def _marker_src_exists(marker_path: str) -> bool:
+    try:
+        with open(marker_path) as f:
+            return os.path.exists(json.load(f)["src"])
+    except (OSError, ValueError, KeyError, TypeError):
+        return False
+
+
 def _cache_tag(sf_dir: str) -> str:
     """Cache namespace for one data root: basename + full-path hash.  The
     GC in _gc_stale_layouts assumes ONE source root per namespace, so two
@@ -167,9 +212,11 @@ def _cache_tag(sf_dir: str) -> str:
     return f"{os.path.basename(norm)}-{hashlib.md5(norm.encode()).hexdigest()[:8]}"
 
 
-def _cached_path(spark: SparkSession, sf_dir: str, name: str) -> str:
+def _cached_path(spark: SparkSession, sf_dir: str, name: str) -> tuple[str, StructType]:
+    """The path to scan for one table and the schema to scan it with."""
     src = f"{sf_dir}/{name}.parquet"
-    dst = os.path.join(_CACHE_BASE, _cache_tag(sf_dir), f"{name}-{_layout_key(src)}")
+    tag = _cache_tag(sf_dir)
+    dst = os.path.join(_CACHE_BASE, tag, f"{name}-{_layout_key(src)}")
     marker_path = dst + ".marker"
     stat = os.stat(src)
     if os.path.exists(marker_path):
@@ -179,16 +226,26 @@ def _cached_path(spark: SparkSession, sf_dir: str, name: str) -> str:
             marker["size"] == stat.st_size
             and marker["mtime"] == stat.st_mtime
             and marker.get("rule") == _LAYOUT_RULE
+            and "schema" in marker
             and (marker["passthrough"] or os.path.isdir(dst))
         ):
-            return src if marker["passthrough"] else dst
+            schema = StructType.fromJson(marker["schema"])
+            return (src if marker["passthrough"] else dst), schema
     _relayout(spark, src, dst, marker_path)
     _gc_stale_layouts(
         os.path.dirname(dst),
         name,
         keep={os.path.basename(dst), os.path.basename(marker_path)},
     )
+    _gc_dead_namespaces(keep=tag)
     return _cached_path(spark, sf_dir, name)
+
+
+def source_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
+    """The schema recorded for one table's layout: its stored types, so
+    ``events.ts`` is the nanosecond long, not load_table's timestamp."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return _cached_path(spark, sf_dir, name)[1]
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -202,9 +259,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     The conf is set here (it is runtime-settable) rather than only at
     session build time so the loader works under ANY SparkSession —
     including the driver's own, which never calls our session.py.
+
+    The read uses the schema recorded when the table was laid out, so it
+    runs no schema-inference job.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(_cached_path(spark, sf_dir, name))
+    path, schema = _cached_path(spark, sf_dir, name)
+    df = spark.read.schema(schema).parquet(path)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn(
             "ts", F.timestamp_micros((F.col("ts") / F.lit(1000)).cast("long")).cast("timestamp_ntz")

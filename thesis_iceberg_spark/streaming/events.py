@@ -19,25 +19,22 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from thesis_iceberg_spark.sources.registry import load_table
+from thesis_iceberg_spark.sources.registry import load_table, source_schema
 
 DEC = "decimal(18,4)"
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over events.parquet (schema from a static read;
-    nanosecond-long ts normalized to TIMESTAMP_NTZ exactly like the batch
-    loader)."""
-    # runtime-settable; required under ANY session (driver's included) because
-    # events.parquet stores TIMESTAMP(NANOS)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    static = spark.read.parquet(f"{sf_dir}/events.parquet")
+    """File-source stream over events.parquet (schema recorded by the
+    source loader; nanosecond-long ts normalized to TIMESTAMP_NTZ exactly
+    like the batch loader)."""
+    schema = source_schema(spark, sf_dir, "events")
     stream = (
-        spark.readStream.schema(static.schema)
+        spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    ts_type = dict(static.dtypes).get("ts")
+    ts_type = schema["ts"].dataType.simpleString() if "ts" in schema.names else None
     if ts_type == "bigint":
         # watermarks require TIMESTAMP (ltz), not NTZ; session tz is UTC so
         # wall-clock values match the batch loader's NTZ exactly
